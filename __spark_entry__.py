@@ -1,7 +1,7 @@
 """Driver contract for the PySpark extraction engine.
 
 ``entry`` runs the flagship extraction pipeline (span-ified documents ->
-archive fan-out -> skew split -> Arrow-batched extraction kernel) at
+archive fan-out -> Arrow-batched extraction kernel) at
 sf0.001. ``queries``/``oracle_sql`` expose every implemented operator from
 SURVEY.md §2 plus the training-pipeline operators (dedup / similarity /
 text analysis / multimodal) with exact DuckDB oracles where the semantics

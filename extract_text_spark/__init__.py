@@ -18,9 +18,11 @@ Design (see SURVEY.md for the full blueprint):
 * **Extraction kernels are pure Python string transforms** (the reference
   is a Python string-transform service), executed as Arrow-batched
   ``mapInPandas`` (iterator form) — never per-row Python UDFs.
-* **Scale levers**: salted repartition by doc_id, span-chunk splitting for
-  oversized documents (skew), byte-aware Arrow batching, bucket-level
-  checkpoint manifests with left-anti-join resume.
+* **Scale levers**: salted repartition by doc_id (several partitions per
+  core, so idle cores take the tasks left while an oversized document
+  runs), byte-aware Arrow batching, bucket-level checkpoint manifests with
+  left-anti-join resume. Span-chunk splitting of oversized documents is
+  opt-in (``skew_split=True``).
 * **Byte ingress** (round 2): ``ingest.extract_from_bytes`` parses REAL
   file bytes — zip/tar/rar/7z containers, DOCX/XLSX/PPTX/ODT/EPUB,
   classic-xref PDFs — into the span model, with filename sanitization and

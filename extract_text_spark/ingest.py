@@ -771,10 +771,11 @@ def extract_from_bytes(df: DataFrame, validate: bool = False,
     """Full byte-ingest pipeline: parse containers -> JVM fan-out ->
     extraction kernel (pipeline.extract_spans_df).
 
-    The ingest output is persisted (MEMORY_AND_DISK) before the
-    extraction pipeline's small/big path split: both paths consume it,
-    and without the materialization barrier every container would be
-    PARSED once per path — 2x the ingest-kernel cost for nothing.
+    The ingest output is persisted (MEMORY_AND_DISK). The default
+    one-pass extraction plan reads it once, so the cache pays off only
+    when the ingest output is read again: a second action on the result,
+    or the opt-in ``skew_split=True`` route, whose small and big paths
+    would otherwise each PARSE every container.
     ``materialize=False`` skips the persist — long-running streaming
     sinks call this per micro-batch, where an unbounded pile of cached
     batches is worse than a bounded per-batch double parse.

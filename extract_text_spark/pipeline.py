@@ -5,17 +5,29 @@ Stages (all declarative except the extraction kernel itself):
 1. **Archive fan-out** — ≤3 bounded rounds of pure Catalyst ops
    (``from_json`` + ``explode`` + regexp path sanitation + guard filters),
    reproducing A1-A8 of SURVEY.md §2.3 JVM-side with no Python.
-2. **Skew split** — documents above ``SKEW_SPLIT_BYTES`` whose spans are all
-   page-independent (``pdf_page``/``media``) are split into span chunks
-   (window-function chunk ids that keep a media span glued to its preceding
-   page), extracted as independent rows, and reassembled order-preserving
-   with ``collect_list`` — the oversized-PDF skew rule of the north star.
-3. **Salted repartition** — ``repartition(pmod(xxhash64(doc_id), P))``
-   spreads hot doc_ids; with AQE on, post-shuffle coalescing keeps small
-   runs tight.
-4. **Extraction kernel** — Arrow-batched ``mapInPandas`` (iterator form)
+2. **Salted repartition** — ``repartition(pmod(xxhash64(doc_id), P))``
+   spreads hot doc_ids; with P at several partitions per core, idle cores
+   take the remaining tasks while an oversized document runs, and with
+   AQE on, post-shuffle coalescing keeps small runs tight.
+3. **Extraction kernel** — Arrow-batched ``mapInPandas`` (iterator form)
    running ``extractors.extract_document`` per row; never per-row Python
    UDFs, no driver-side collects.
+
+That is the whole default plan: one scan, one kernel, no persist, no
+window and no union.
+
+**Opt-in skew split** (``skew_split=True``) — documents above
+``SKEW_SPLIT_BYTES`` whose spans are all page-independent
+(``pdf_page``/``media``) are split into span chunks (window-function
+chunk ids that keep a media span glued to its preceding page), extracted
+as independent rows, and reassembled order-preserving with
+``collect_list``. Output is identical either way. On the benchmark's
+corpora (page-only whales of about 4-6 MB at ``local[4]``) the chunk,
+window and reassembly stages cost more than the stragglers they
+removed, so the route is off by default; whether a 20 MB whale on more
+cores needs it has not been measured. The streaming twins
+(``streaming.stream``) take ``skew_split=True`` too; ``keep_root`` does
+not combine with it.
 
 The output schema is
 ``(doc_id, status, spans array<struct<kind,text,media_ref,offset>>,
@@ -293,14 +305,13 @@ def _splittable_col(threshold: int):
     )
 
 
-def _chunk_big(big: DataFrame, with_root: bool = False) -> DataFrame:
+def _chunk_big(big: DataFrame) -> DataFrame:
     """Span-chunk oversized docs; adds (chunk_id, n_chunks)."""
     from pyspark.sql.window import Window
 
-    root_sel = ["root_id"] if with_root else []
     w = Window.partitionBy("doc_id").orderBy("pos")
     exploded = (
-        big.select("doc_id", "status", *root_sel,
+        big.select("doc_id", "status",
                    F.posexplode("spans").alias("pos", "span"))
         .withColumn(
             "anchor",
@@ -311,26 +322,23 @@ def _chunk_big(big: DataFrame, with_root: bool = False) -> DataFrame:
         .withColumn("chunk_id", (F.greatest(F.col("anchor"), F.lit(0))
                                  / SKEW_CHUNK_SPANS).cast(IntegerType()))
     )
-    aggs = [
-        F.array_sort(F.collect_list(F.struct("pos", "span"))).alias("ps"),
-        F.first("status").alias("status"),
-    ]
-    if with_root:
-        aggs.append(F.first("root_id").alias("root_id"))
     chunks = (
         exploded.groupBy("doc_id", "chunk_id")
-        .agg(*aggs)
+        .agg(
+            F.array_sort(F.collect_list(F.struct("pos", "span"))).alias("ps"),
+            F.first("status").alias("status"),
+        )
         .withColumn("spans", F.transform("ps", lambda x: x.span))
         .withColumn(
             "n_chunks",
             F.count("*").over(Window.partitionBy("doc_id")).cast(IntegerType()),
         )
-        .select("doc_id", "spans", "status", *root_sel, "chunk_id", "n_chunks")
+        .select("doc_id", "spans", "status", "chunk_id", "n_chunks")
     )
     return chunks
 
 
-def _reassemble(multi: DataFrame, with_root: bool = False) -> DataFrame:
+def _reassemble(multi: DataFrame) -> DataFrame:
     """Merge chunked extraction outputs back into whole documents.
 
     Error contract matches the unsplit kernel (extract_document): any
@@ -338,20 +346,17 @@ def _reassemble(multi: DataFrame, with_root: bool = False) -> DataFrame:
     n_spans/n_chars — so split and unsplit paths are indistinguishable
     (bytes_in stays the summed input size, as in the unsplit error row).
     """
-    aggs = [
-        F.array_sort(
-            F.collect_list(F.struct("chunk_id", "spans"))
-        ).alias("cs"),
-        F.max(F.when(F.col("status").startswith("error"), F.col("status"))).alias("err"),
-        F.max(F.when(F.col("status") == "ok", F.lit(1)).otherwise(0)).alias("any_ok"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.sum("bytes_in").alias("bytes_in"),
-    ]
-    if with_root:
-        aggs.append(F.first("root_id").alias("root_id"))
     merged = (
         multi.groupBy("doc_id")
-        .agg(*aggs)
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("chunk_id", "spans"))
+            ).alias("cs"),
+            F.max(F.when(F.col("status").startswith("error"), F.col("status"))).alias("err"),
+            F.max(F.when(F.col("status") == "ok", F.lit(1)).otherwise(0)).alias("any_ok"),
+            F.sum("n_chars").alias("sum_chars"),
+            F.sum("bytes_in").alias("bytes_in"),
+        )
         .withColumn(
             "flat",
             F.when(F.col("err").isNotNull(),
@@ -381,8 +386,7 @@ def _reassemble(multi: DataFrame, with_root: bool = False) -> DataFrame:
             F.when(F.col("err").isNotNull(), F.lit(0).cast(LongType()))
             .otherwise(F.col("sum_chars")),
         )
-        .select("doc_id", "status", "spans", "n_spans", "n_chars", "bytes_in",
-                *(["root_id"] if with_root else []))
+        .select("doc_id", "status", "spans", "n_spans", "n_chars", "bytes_in")
     )
     return merged
 
@@ -393,42 +397,43 @@ _ROOT_FIELD = StructField("root_id", StringType())
 def extract_spans_df(
     df: DataFrame,
     salt_partitions: int | None = None,
-    skew_split: bool = True,
+    skew_split: bool = False,
     skew_threshold: int = SKEW_SPLIT_BYTES,
     keep_root: bool = False,
 ) -> DataFrame:
     """documents(doc_id, spans) -> extracted spans DataFrame (OUT_SCHEMA).
 
-    The small/big split happens *before* the Python kernel, so every row
-    pays the Arrow/Python cost exactly once: the bulk path is
-    scan -> (salt shuffle) -> kernel with no post-kernel reshaping, and only
-    oversized docs take the chunk -> kernel -> collect_list reassembly
-    detour. (A post-kernel filter-into-union would re-run the kernel per
-    branch — 2x the Python work.)
+    The default plan is scan -> fan-out -> (salt shuffle) -> one kernel,
+    with no persist, no post-kernel reshaping and no union.
+
+    ``skew_split=True`` (opt-in) routes oversized page-independent docs
+    (``_splittable_col(skew_threshold)``) through the chunk -> kernel ->
+    collect_list reassembly detour. The small/big split happens *before*
+    the Python kernel, so every row still pays the Arrow/Python cost
+    exactly once (a post-kernel filter-into-union would re-run the kernel
+    per branch — 2x the Python work).
 
     ``keep_root=True`` appends a ``root_id`` column: the pre-fan-out input
     doc_id (== doc_id for non-archive rows). Only keep_root callers
     (checkpointing) pay the carry cost — the default path is byte-identical
-    to the plain 3-column kernel plan.
+    to the plain 3-column kernel plan. It runs on the one-pass plan only:
+    combined with ``skew_split=True`` it raises ``ValueError``.
     """
+    if skew_split and keep_root:
+        raise ValueError("keep_root=True requires skew_split=False")
     fanned = explode_archives_df(df, with_root=keep_root)
-    root_sel = ["root_id"] if keep_root else []
 
-    # Salt BEFORE the small/big routing filters: both branches then hang
-    # off ONE identical Exchange subtree, which Spark executes once and
-    # wires into the second branch as a ReusedExchange — the former
-    # shape (filter first, salt the small branch only) re-scanned and
-    # re-fanned the ENTIRE corpus a second time just to find the rare
-    # oversized docs (guide §2.4; ~27% of headline wall at sf-bench).
-    # Filter/repartition commute row-wise, so kernel inputs and outputs
-    # are identical; the split predicate is evaluated once per row per
-    # branch post-exchange, which is noise next to a full re-scan.
     if salt_partitions:
         fanned = fanned.repartition(
             salt_partitions, F.pmod(F.xxhash64("doc_id"), F.lit(salt_partitions))
         )
 
     if skew_split:
+        # Both routing filters read the salted corpus. Catalyst pushes each
+        # branch's filter below the repartition Exchange, so the branches
+        # cannot share one exchange and the corpus would be scanned, fanned
+        # out and shuffled once per branch; persisting the salted corpus
+        # lets both read one materialized copy. Unsalted, each branch scans.
         from pyspark.storagelevel import StorageLevel
         if salt_partitions:
             fanned = fanned.persist(StorageLevel.MEMORY_AND_DISK)
@@ -449,35 +454,26 @@ def extract_spans_df(
 
     if keep_root:
         small_schema = StructType(OUT_SCHEMA.fields + [_ROOT_FIELD])
-        out_small = small.select(
+        return small.select(
             "doc_id", "spans", "status", "root_id"
-        ).mapInPandas(_meta_wrapped(["root_id"]), schema=small_schema)
-    else:
-        out_small = small.select("doc_id", "spans", "status").mapInPandas(
-            _extract_batches, schema=OUT_SCHEMA
-        )
+        ).mapInPandas(_meta_wrapped(["root_id"]), schema=small_schema
+        ).withColumn("root_id", F.coalesce("root_id", "doc_id"))
 
-    def _finish(out: DataFrame) -> DataFrame:
-        if keep_root:
-            return out.withColumn("root_id", F.coalesce("root_id", "doc_id"))
-        return out
-
+    out_small = small.select("doc_id", "spans", "status").mapInPandas(
+        _extract_batches, schema=OUT_SCHEMA
+    )
     if big is None:
-        return _finish(out_small)
+        return out_small
 
     # Oversized docs: chunk (already a shuffle by doc_id+chunk), extract
     # each chunk independently, reassemble order-preserving.
-    chunks = _chunk_big(big, with_root=keep_root)
+    chunks = _chunk_big(big)
     out_schema = StructType(
         OUT_SCHEMA.fields
         + [StructField("chunk_id", IntegerType()),
            StructField("n_chunks", IntegerType())]
-        + ([_ROOT_FIELD] if keep_root else [])
     )
     out_big = chunks.select(
-        "doc_id", "spans", "status", "chunk_id", "n_chunks", *root_sel
-    ).mapInPandas(
-        _meta_wrapped(["chunk_id", "n_chunks", *root_sel]), schema=out_schema
-    )
-    return _finish(
-        out_small.unionByName(_reassemble(out_big, with_root=keep_root)))
+        "doc_id", "spans", "status", "chunk_id", "n_chunks"
+    ).mapInPandas(_meta_wrapped(["chunk_id", "n_chunks"]), schema=out_schema)
+    return out_small.unionByName(_reassemble(out_big))

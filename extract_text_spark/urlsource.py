@@ -436,15 +436,15 @@ def extract_from_urls(df: DataFrame, fetch,
     """Full URL pipeline: validate+fetch+route -> JVM fan-out ->
     extraction kernel, mirroring ingest.extract_from_bytes.
 
-    The ingest output is persisted (MEMORY_AND_DISK) before the
-    extraction pipeline's small/big path split: both paths consume it,
-    and without the materialization barrier each URL would be FETCHED
-    once per path — wrong for a side-effecting network tier, and 2x the
-    kernel cost. The cache is not released here (the result is lazy):
-    looping drivers pass ``cache_registry=`` and free each job via
-    ``ingest.release_caches(registry)``; the handle also rides on the
-    untouched result as ``result.ingest_cache`` for one-shot callers
-    (a plain attribute — lost on any transformation)."""
+    The ingest output is persisted (MEMORY_AND_DISK). The default
+    one-pass extraction plan reads it once; the cache keeps a second
+    action on the result, or the opt-in ``skew_split=True`` route with
+    its two paths, from FETCHING each URL again — wrong for a
+    side-effecting network tier. The cache is not released here (the
+    result is lazy): looping callers pass ``cache_registry=`` and free
+    each job via ``ingest.release_caches(registry)``; the handle also
+    rides on the untouched result as ``result.ingest_cache`` for
+    one-shot callers (a plain attribute — lost on any transformation)."""
     from pyspark import StorageLevel
     from .pipeline import extract_spans_df
     ingest_kwargs = {k: kwargs.pop(k) for k in

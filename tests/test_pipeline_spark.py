@@ -2,6 +2,8 @@
 span-sequence equality (kind, text, media_ref, order) per document, plus
 skew-split equivalence and plan-shape checks."""
 
+import json
+
 import pytest
 
 from extract_text_spark.corpus import corpus_to_df, gen_corpus, oracle_extract
@@ -73,10 +75,10 @@ def test_skew_split_equivalence(spark):
 
 
 def test_skew_split_salted_persist_path_equivalence(spark):
-    """salt_partitions + skew_split is the single-scan persist route (the
-    fanned table is materialized once and BOTH branches read the cache):
-    with a forced-big threshold the output must still equal the unsplit
-    and the unsalted-split runs exactly."""
+    """salt_partitions + skew_split=True is the opt-in single-scan persist
+    route (the fanned table is materialized once and BOTH branches read
+    the cache): with a forced-big threshold the output must still equal
+    the unsplit and the unsalted-split runs exactly."""
     corpus = gen_corpus(400, seed=7)
     docs = ([d for d in corpus if d["doc_id"].endswith("-skew")]
             + [d for d in corpus if not d["doc_id"].endswith("-skew")][:40])
@@ -115,6 +117,43 @@ def test_skew_split_equivalence_with_erroring_chunk(spark):
     assert st.startswith("error:") and spans == []
     row = extract_spans_df(df, skew_split=True, skew_threshold=1).collect()[0]
     assert row["n_spans"] == 0 and row["n_chars"] == 0
+
+
+def _pdf_page(page_no: int, text: str) -> str:
+    return json.dumps({"page_no": page_no, "blocks": [
+        {"bbox": [0, 0, 10, 5], "text": text}]})
+
+
+def test_skew_split_rejects_keep_root(spark):
+    """keep_root (checkpointing) runs on the one-pass plan only; the
+    opt-in split route carries no root_id, so asking for both fails
+    before any plan is built."""
+    df = corpus_to_df(spark, gen_corpus(5, seed=7))
+    with pytest.raises(ValueError, match="keep_root"):
+        extract_spans_df(df, keep_root=True, skew_split=True)
+
+
+def test_default_plan_is_one_pass(spark, corpus):
+    """The default plan is scan -> fan-out -> salt -> ONE kernel: no
+    persist, no window chunking, no union, and nothing left cached after
+    the action — even with a page-only whale above SKEW_SPLIT_BYTES in
+    the input."""
+    from extract_text_spark.config import SKEW_SPLIT_BYTES
+    words = "whale page text " * (SKEW_SPLIT_BYTES // 16 // 8)
+    whale = {"doc_id": "whale", "spans": [
+        {"kind": "pdf_page", "text": _pdf_page(i + 1, words),
+         "media_ref": None, "offset": i} for i in range(10)]}
+    spark.catalog.clearCache()
+    out = extract_spans_df(corpus_to_df(spark, corpus + [whale]),
+                           salt_partitions=8)
+    rows = out.collect()
+    assert {r["doc_id"]: r["status"] for r in rows}["whale"] == "ok"
+    # the final adaptive plan (its toString would also print the initial one)
+    plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    for op in ("Window", "Union", "InMemoryTableScan"):
+        assert op not in plan, op
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
 
 
 def test_archive_fanout_matches_oracle(spark):

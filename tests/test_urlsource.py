@@ -238,9 +238,10 @@ def test_spans_from_url_page_then_images_order():
 
 
 def test_each_url_fetched_exactly_once_through_full_pipeline(spark):
-    """The extraction pipeline's small/big path split consumes the ingest
-    output twice; without the materialization barrier every URL would be
-    FETCHED once per path. Pin fetch-count == url-count via accumulator."""
+    """The one-pass extraction plan reads the ingest output once, and the
+    persisted ingest keeps a second action on the result from FETCHING
+    every URL again. Pin fetch-count == url-count across two actions via
+    an accumulator."""
     acc = spark.sparkContext.accumulator(0)
 
     def counting_fetch(url, ua):
@@ -255,6 +256,7 @@ def test_each_url_fetched_exactly_once_through_full_pipeline(spark):
     out = extract_from_urls(urls, counting_fetch,
                             resolver=lambda h: ["93.184.216.34"])
     assert out.count() == 40
+    assert out.filter("status = 'ok'").count() == 40
     assert acc.value == 40, f"fetched {acc.value} times for 40 urls"
 
 

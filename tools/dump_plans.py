@@ -13,6 +13,12 @@ sys.path.insert(0, "/root/repo")
 SF = "/root/testdata/sf0.01"
 
 
+def n_nodes(ftext: str, op: str) -> int:
+    """Distinct plan-node ids of one operator (the detail appendix repeats
+    every node, so raw substring counts double-count)."""
+    return len(set(re.findall(re.escape(op) + r"\s*\((\d+)\)", ftext)))
+
+
 def plan_of(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -83,10 +89,14 @@ def main():
     ])
 
     pipe = extract_spans_df(_docs_as_span_table(spark, SF), salt_partitions=8)
-    add("full extraction pipeline — one Python stage per path", pipe, [
-        ("Arrow-batched kernel (MapInPandas / ArrowEvalPython)",
-         r"MapInPandas|FlatMapGroupsInPandas|PythonMapInArrow"),
+    add("full extraction pipeline — one pass, one Python stage", pipe, [
+        ("exactly one Arrow-batched kernel (one MapInPandas node)",
+         lambda t: n_nodes(t, "MapInPandas") == 1),
         ("salted exchange before the kernel", r"hashpartitioning\(pmod"),
+        ("no persist (no InMemoryTableScan), no span-chunk Window, no Union",
+         lambda t: all(op not in t for op in
+                       ("InMemoryTableScan", "Window", "Union"))),
+        ("exactly one parquet scan", one_scan),
     ])
 
     topk = QUERIES["sim_cosine_topk"](spark, SF)
@@ -337,16 +347,10 @@ def main():
          lambda t: "BatchEvalPython" not in t and "MapInPandas" not in t),
     ])
 
-    def scans_le(n: int):
-        # full extraction pipelines split the small/big size paths BEFORE
-        # the kernel (CLAUDE.md invariant), so each path scans once
-        return lambda t: t.split("\n\n(1)")[0].count("Scan parquet") <= n
-
     ui = QUERIES["ext_url_images"](spark, SF)
     add("ext_url_images — one URL kernel, fan-out + extraction shared "
         "downstream", ui, [
-        ("at most one scan per size path (small/big split pre-kernel)",
-         scans_le(2)),
+        ("single scan of the input (one-pass extraction plan)", one_scan),
         ("Arrow-batched kernels only (no row-at-a-time Python)",
          lambda t: "BatchEvalPython" not in t),
         ("MapInPandas present", r"MapInPandas"),
@@ -355,8 +359,7 @@ def main():
     rz = QUERIES["ext_rar7z_fanout"](spark, SF)
     add("ext_rar7z_fanout — vendored readers inside the single ingest "
         "kernel, JVM-only fan-out", rz, [
-        ("at most one scan per size path (small/big split pre-kernel)",
-         scans_le(2)),
+        ("single scan of the input (one-pass extraction plan)", one_scan),
         ("Arrow-batched kernels only (no row-at-a-time Python)",
          lambda t: "BatchEvalPython" not in t),
         ("MapInPandas present", r"MapInPandas"),
@@ -403,27 +406,26 @@ def main():
     mc = QUERIES["ext_main_content"](spark, SF)
     add("ext_main_content — heuristic kernel inside the standard "
         "extraction pipeline", mc, [
-        ("one Python kernel per size path (2 MapInPandas nodes; paths "
-         "partition rows, so a row runs exactly one kernel)",
-         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 2),
+        ("exactly one Python kernel (1 MapInPandas node)",
+         lambda t: n_nodes(t, "MapInPandas") == 1),
         ("page synthesis is pure codegen (concat/when before the kernel)",
          lambda t: "BatchEvalPython" not in t),
-        ("big-path skew machinery present (span-chunk windows)",
-         r"Window"),
+        ("no skew-split machinery (no span-chunk Window, no Union)",
+         lambda t: "Window" not in t and "Union" not in t),
+        ("single scan of the documents table", one_scan),
     ])
 
     ag = QUERIES["ext_archive_guards"](spark, SF)
     add("ext_archive_guards — guards inside the once-run, cached ingest "
         "kernel; JVM fan-out", ag, [
-        ("4 MapInPandas nodes: fixture builder + ingest (run once, "
-         "cached) + one extraction kernel per size path",
-         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 4),
-        ("BOTH extraction paths read the cached ingest "
-         "(InMemoryTableScan — containers never parse twice)",
-         lambda t: t.count("InMemoryTableScan") >= 2),
+        ("3 MapInPandas nodes: fixture generator + ingest (cached) + "
+         "one extraction kernel",
+         lambda t: n_nodes(t, "MapInPandas") == 3),
+        ("the extraction reads the cached ingest once (one "
+         "InMemoryTableScan)",
+         lambda t: n_nodes(t, "InMemoryTableScan") == 1),
         ("exactly one parquet scan node of documents feeds everything",
-         lambda t: len(set(re.findall(r"Scan parquet\s*\((\d+)\)",
-                                      t))) == 1),
+         lambda t: n_nodes(t, "Scan parquet") == 1),
         ("nested-member fan-out is JVM-only (Generate explode, no "
          "Python between kernels)",
          lambda t: "Generate" in t and "BatchEvalPython" not in t),
@@ -442,8 +444,7 @@ def main():
         ("no Python stage (pure conv/md5/bitwise codegen)",
          lambda t: "MapInPandas" not in t and "BatchEvalPython" not in t),
         ("single scan of the corpus",
-         lambda t: len(set(re.findall(r"Scan parquet\s*\((\d+)\)",
-                                      t))) == 1),
+         lambda t: n_nodes(t, "Scan parquet") == 1),
     ])
 
     ds = QUERIES["sample_dsir"](spark, SF)
@@ -460,12 +461,12 @@ def main():
     wq = QUERIES["ext_warc_source"](spark, SF)
     add("ext_warc_source — WARC split + routing in the cached ingest "
         "kernel; shared extraction tail", wq, [
-        ("4 MapInPandas nodes: fixture builder + WARC ingest (run once, "
-         "cached) + one extraction kernel per size path",
-         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 4),
-        ("BOTH extraction paths read the cached ingest (WARC files "
-         "never decompress twice)",
-         lambda t: t.count("InMemoryTableScan") >= 2),
+        ("3 MapInPandas nodes: fixture generator + WARC ingest (cached) + "
+         "one extraction kernel",
+         lambda t: n_nodes(t, "MapInPandas") == 3),
+        ("the extraction reads the cached ingest once (one "
+         "InMemoryTableScan)",
+         lambda t: n_nodes(t, "InMemoryTableScan") == 1),
         ("record fan-out happens inside the kernel — no Python between "
          "kernels", lambda t: "BatchEvalPython" not in t),
     ])
@@ -473,7 +474,7 @@ def main():
     bp = QUERIES["ta_bpe"](spark, SF)
     add("ta_bpe — one Arrow kernel, no shuffle before it", bp, [
         ("exactly one MapInPandas (the merge loop)",
-         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 1),
+         lambda t: n_nodes(t, "MapInPandas") == 1),
         ("no Exchange before the kernel (partition-preserving encode; "
          "the only exchange is the output orderBy's range partition)",
          lambda t: len(set(re.findall(r"Exchange(?:\w*)? \((\d+)\)",
@@ -487,8 +488,7 @@ def main():
     add("ta_bpe_train — one training round (pair count + argmax)", bt, [
         ("the corpus is scanned once (everything later touches only "
          "the distinct-word table)",
-         lambda t: len(set(re.findall(r"Scan parquet\s*\((\d+)\)",
-                                      t))) == 1),
+         lambda t: n_nodes(t, "Scan parquet") == 1),
         ("pair counts are map-side partial aggregates before their "
          "exchange (both the word-freq and the pair groupBy)",
          lambda t: t.count("partial_count") + t.count("partial_sum") >= 2),
@@ -542,7 +542,7 @@ def main():
         ("single scan of the documents table", one_scan),
         ("exactly two Arrow kernels (the WAT writer and the round-trip "
          "verifier), no row-at-a-time Python",
-         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 2
+         lambda t: n_nodes(t, "MapInPandas") == 2
          and "BatchEvalPython" not in t),
         ("the only exchange is the output sort's range partition "
          "(records never shuffle between write and verify)",
@@ -582,10 +582,9 @@ def main():
         ("the robots table is broadcast (the frontier never shuffles "
          "for the gate)", r"BroadcastExchange"),
         ("one Arrow kernel for the RFC 9309 evaluation",
-         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 1),
+         lambda t: n_nodes(t, "MapInPandas") == 1),
         ("single scan of the documents table",
-         lambda t: len(set(re.findall(r"Scan parquet\s*\((\d+)\)",
-                                      t))) == 1),
+         lambda t: n_nodes(t, "Scan parquet") == 1),
     ])
 
     header = (

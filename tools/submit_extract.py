@@ -80,9 +80,9 @@ def main(argv: list[str]) -> int:
         from pyspark import StorageLevel
         from extract_text_spark.ingest import ingest_bytes_df, named_binary_df
         # materialization barrier: the checkpointed pipeline consumes docs
-        # several times (bucket derivation, emptiness probe, small/big
-        # extraction paths) — without the persist each pass re-runs the
-        # container-parsing kernel over every file
+        # several times (bucket derivation, emptiness probe, extraction) —
+        # without the persist each pass re-runs the container-parsing
+        # kernel over every file
         docs = ingest_bytes_df(
             named_binary_df(spark.read.format("binaryFile")
                             .load(args.input))).persist(
