@@ -21,8 +21,8 @@ Design (see SURVEY.md for the full blueprint):
 * **Scale levers**: salted repartition by doc_id (several partitions per
   core, so idle cores take the tasks left while an oversized document
   runs), byte-aware Arrow batching, bucket-level checkpoint manifests with
-  left-anti-join resume. Span-chunk splitting of oversized documents is
-  opt-in (``skew_split=True``).
+  left-anti-join resume. Every extraction (batch, streaming,
+  checkpointed) is one plan: scan -> fan-out -> salt -> one kernel.
 * **Byte ingress** (round 2): ``ingest.extract_from_bytes`` parses REAL
   file bytes — zip/tar/rar/7z containers, DOCX/XLSX/PPTX/ODT/EPUB,
   classic-xref PDFs — into the span model, with filename sanitization and

@@ -15,10 +15,9 @@ MAX_ARCHIVE_NESTING = 3                   # app/config.py:75
 DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS_PER_BATCH = 2048         # rows/batch; bytes capped below
 ARROW_MAX_BYTES_PER_BATCH = 32 * 1024 * 1024  # byte-aware cap for 20 MB rows
-SKEW_SPLIT_BYTES = 256 * 1024              # with skew_split=True (opt-in),
-                                           # docs above this get span-chunk
-                                           # split (~50-100x the median doc)
-SKEW_CHUNK_SPANS = 16                      # payload spans per skew chunk
+SKEW_SPLIT_BYTES = 256 * 1024              # whale threshold: page-only docs
+                                           # above this (~50-100x the median
+                                           # doc) count as oversized
 DEFAULT_NUM_BUCKETS = 64                   # checkpoint manifest granularity
 
 # Output span kinds (the explicit form of the reference's inline markers).

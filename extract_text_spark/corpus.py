@@ -288,8 +288,8 @@ def _f_unsupported(rng, doc_id):
 def _f_skew(rng, doc_id):
     # F23: oversized many-page PDF docs. At bench scale (SIZE_MULT >= 8)
     # one in ten is a genuine whale (hundreds of pages, >SKEW_SPLIT_BYTES)
-    # so the span-chunk splitter exercises for real, not only under a
-    # forced threshold; the rest are merely large.
+    # so salting and byte-aware Arrow batching meet real stragglers; the
+    # rest are merely large.
     if SIZE_MULT >= 8 and rng.random() < 0.1:
         return _f_pdf(rng, doc_id, n_pages=400)
     return _f_pdf(rng, doc_id, n_pages=60)

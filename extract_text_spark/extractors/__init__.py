@@ -6,7 +6,7 @@ row ``(doc_id, spans)`` from the input table and produces
 ``(status, out_spans)`` with the reference's per-format semantics. The Spark
 pipeline runs this same kernel inside Arrow-batched ``mapInPandas``; the
 test oracle runs it single-process — span-sequence equality between the two
-validates every distributed mechanism (fan-out, chunked skew splits,
+validates every distributed mechanism (fan-out, salting,
 checkpoint resume, batch boundaries) while per-format *semantics* are pinned
 by hardcoded unit assertions mirroring the reference's own tests.
 

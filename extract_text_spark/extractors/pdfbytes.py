@@ -8,8 +8,8 @@ files, content streams raw or FlateDecode (zlib, PNG predictors 10-15),
 text drawn with Tj/TJ/' operators. Each page becomes the block payload
 ``{"page_no": n, "blocks": [{"bbox": [...], "text": ...}]}`` that
 extractors/pdf_layout.py already consumes — so real PDF bytes ride the
-pinned X-Y-cut reading-order path, the ``[Page n]`` markers, and the skew
-splitter unchanged.
+pinned X-Y-cut reading-order path and the ``[Page n]`` markers
+unchanged.
 
 Object resolution is by LINEAR RECONSTRUCTION, not xref offsets: every
 top-level ``N G obj .. endobj`` is scanned (later occurrences win, which

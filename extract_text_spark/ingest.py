@@ -693,8 +693,8 @@ def spans_from_bytes(content: bytes, filename: str) -> tuple[str | None, list[di
 
 def spans_for_payload(content: bytes, filename: str) -> list[dict]:
     """Supported non-archive bytes -> input spans. Top-level PDFs expand to
-    one pdf_page span per page (pipeline interleaving + skew splitting
-    apply to real PDF bytes); everything else is one span."""
+    one pdf_page span per page (pipeline interleaving applies to real
+    PDF bytes); everything else is one span."""
     if get_file_extension(filename) == "pdf":
         from .extractors.pdfbytes import pdf_pages_from_bytes
         try:
@@ -765,20 +765,15 @@ def ingest_bytes_df(df: DataFrame, validate: bool = False) -> DataFrame:
 
 
 def extract_from_bytes(df: DataFrame, validate: bool = False,
-                       materialize: bool = True,
                        cache_registry: list | None = None,
                        **extract_kwargs) -> DataFrame:
     """Full byte-ingest pipeline: parse containers -> JVM fan-out ->
     extraction kernel (pipeline.extract_spans_df).
 
-    The ingest output is persisted (MEMORY_AND_DISK). The default
-    one-pass extraction plan reads it once, so the cache pays off only
-    when the ingest output is read again: a second action on the result,
-    or the opt-in ``skew_split=True`` route, whose small and big paths
-    would otherwise each PARSE every container.
-    ``materialize=False`` skips the persist — long-running streaming
-    sinks call this per micro-batch, where an unbounded pile of cached
-    batches is worse than a bounded per-batch double parse.
+    The ingest output is persisted (MEMORY_AND_DISK). The one-pass
+    extraction plan reads it once, so the cache pays off only when the
+    ingest output is read again: a second action on the result would
+    otherwise PARSE every container again.
 
     Releasing the cache: looping drivers pass ``cache_registry=`` (any
     list they own) — the persisted handle is appended to it, and
@@ -789,15 +784,13 @@ def extract_from_bytes(df: DataFrame, validate: bool = False,
     (``result.select(...)``) returns a new object without it, which is
     exactly why loops should own the registry instead."""
     from .pipeline import extract_spans_df
-    ing = ingest_bytes_df(df, validate=validate)
-    if materialize:
-        from pyspark import StorageLevel
-        ing = ing.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_registry is not None:
-            cache_registry.append(ing)
+    from pyspark import StorageLevel
+    ing = ingest_bytes_df(df, validate=validate).persist(
+        StorageLevel.MEMORY_AND_DISK)
+    if cache_registry is not None:
+        cache_registry.append(ing)
     out = extract_spans_df(ing, **extract_kwargs)
-    if materialize:
-        out.ingest_cache = ing
+    out.ingest_cache = ing
     return out
 
 

@@ -13,21 +13,13 @@ Stages (all declarative except the extraction kernel itself):
    running ``extractors.extract_document`` per row; never per-row Python
    UDFs, no driver-side collects.
 
-That is the whole default plan: one scan, one kernel, no persist, no
-window and no union.
-
-**Opt-in skew split** (``skew_split=True``) — documents above
-``SKEW_SPLIT_BYTES`` whose spans are all page-independent
-(``pdf_page``/``media``) are split into span chunks (window-function
-chunk ids that keep a media span glued to its preceding page), extracted
-as independent rows, and reassembled order-preserving with
-``collect_list``. Output is identical either way. On the benchmark's
-corpora (page-only whales of about 4-6 MB at ``local[4]``) the chunk,
-window and reassembly stages cost more than the stragglers they
-removed, so the route is off by default; whether a 20 MB whale on more
-cores needs it has not been measured. The streaming twins
-(``streaming.stream``) take ``skew_split=True`` too; ``keep_root`` does
-not combine with it.
+That is the whole plan, for batch, streaming and checkpointing alike: one
+scan, one kernel, no persist, no window and no union. An oversized
+page-only PDF (a "whale") is one task; the salt spreads the rest of the
+corpus over the other cores while it runs. Whales are not span-chunked:
+on page-only whales of 4-6 MB and of 20 MB at ``local[4]``, window
+chunking plus ``collect_list`` reassembly cost more than the stragglers
+it removed.
 
 The output schema is
 ``(doc_id, status, spans array<struct<kind,text,media_ref,offset>>,
@@ -48,8 +40,6 @@ from pyspark.sql.types import (
 from .config import (
     MAX_ARCHIVE_NESTING,
     MAX_EXTRACTED_SIZE,
-    SKEW_CHUNK_SPANS,
-    SKEW_SPLIT_BYTES,
 )
 from .extractors.archive import SYSTEM_FILE_MARKERS
 
@@ -289,12 +279,12 @@ def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
 
 
 def _splittable_col(threshold: int):
-    """Oversized page-independent docs are eligible for span chunking.
+    """Whale predicate: docs above ``threshold`` bytes whose every span is
+    pdf_page/media, i.e. page-independent documents.
 
-    Only docs whose every span is pdf_page/media (doc-level semantics like
-    the EPUB size budget must see the whole doc). Media spans inherit the
-    chunk of their preceding page so the page-then-images interleaving
-    survives chunk boundaries.
+    Extraction does not route on it (every doc takes the one-pass plan);
+    it names the oversized documents a corpus holds, so a benchmark can
+    report how much of its input is whales (``config.SKEW_SPLIT_BYTES``).
     """
     doc_bytes = F.aggregate(
         "spans", F.lit(0).cast(LongType()),
@@ -305,175 +295,57 @@ def _splittable_col(threshold: int):
     )
 
 
-def _chunk_big(big: DataFrame) -> DataFrame:
-    """Span-chunk oversized docs; adds (chunk_id, n_chunks)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    exploded = (
-        big.select("doc_id", "status",
-                   F.posexplode("spans").alias("pos", "span"))
-        .withColumn(
-            "anchor",
-            F.sum(
-                F.when(F.col("span.kind") != "media", 1).otherwise(0)
-            ).over(w) - 1,
-        )
-        .withColumn("chunk_id", (F.greatest(F.col("anchor"), F.lit(0))
-                                 / SKEW_CHUNK_SPANS).cast(IntegerType()))
-    )
-    chunks = (
-        exploded.groupBy("doc_id", "chunk_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("pos", "span"))).alias("ps"),
-            F.first("status").alias("status"),
-        )
-        .withColumn("spans", F.transform("ps", lambda x: x.span))
-        .withColumn(
-            "n_chunks",
-            F.count("*").over(Window.partitionBy("doc_id")).cast(IntegerType()),
-        )
-        .select("doc_id", "spans", "status", "chunk_id", "n_chunks")
-    )
-    return chunks
-
-
-def _reassemble(multi: DataFrame) -> DataFrame:
-    """Merge chunked extraction outputs back into whole documents.
-
-    Error contract matches the unsplit kernel (extract_document): any
-    erroring chunk poisons the whole document — empty spans, zero
-    n_spans/n_chars — so split and unsplit paths are indistinguishable
-    (bytes_in stays the summed input size, as in the unsplit error row).
-    """
-    merged = (
-        multi.groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("chunk_id", "spans"))
-            ).alias("cs"),
-            F.max(F.when(F.col("status").startswith("error"), F.col("status"))).alias("err"),
-            F.max(F.when(F.col("status") == "ok", F.lit(1)).otherwise(0)).alias("any_ok"),
-            F.sum("n_chars").alias("sum_chars"),
-            F.sum("bytes_in").alias("bytes_in"),
-        )
-        .withColumn(
-            "flat",
-            F.when(F.col("err").isNotNull(),
-                   F.array().cast(SPANS_TYPE.simpleString()))
-            .otherwise(F.flatten(F.transform("cs", lambda c: c.spans))),
-        )
-        .withColumn(
-            "spans",
-            F.transform(
-                "flat",
-                lambda s, i: F.struct(
-                    s.kind.alias("kind"), s.text.alias("text"),
-                    s.media_ref.alias("media_ref"),
-                    i.cast(IntegerType()).alias("offset"),
-                ),
-            ),
-        )
-        .withColumn(
-            "status",
-            F.when(F.col("err").isNotNull(), F.col("err"))
-            .when(F.col("any_ok") == 1, F.lit("ok"))
-            .otherwise(F.lit("empty")),
-        )
-        .withColumn("n_spans", F.size("spans"))
-        .withColumn(
-            "n_chars",
-            F.when(F.col("err").isNotNull(), F.lit(0).cast(LongType()))
-            .otherwise(F.col("sum_chars")),
-        )
-        .select("doc_id", "status", "spans", "n_spans", "n_chars", "bytes_in")
-    )
-    return merged
-
-
 _ROOT_FIELD = StructField("root_id", StringType())
+
+
+def _extract_batches_with_root(
+    batches: Iterator["pd.DataFrame"],
+) -> Iterator["pd.DataFrame"]:
+    """``_extract_batches`` that carries each row's ``root_id`` through."""
+    import pandas as pd
+
+    for batch in batches:
+        root = batch[["root_id"]].reset_index(drop=True)
+        res = next(_extract_batches(iter([batch]))).reset_index(drop=True)
+        yield pd.concat([res, root], axis=1)
 
 
 def extract_spans_df(
     df: DataFrame,
     salt_partitions: int | None = None,
     skew_split: bool = False,
-    skew_threshold: int = SKEW_SPLIT_BYTES,
     keep_root: bool = False,
 ) -> DataFrame:
     """documents(doc_id, spans) -> extracted spans DataFrame (OUT_SCHEMA).
 
-    The default plan is scan -> fan-out -> (salt shuffle) -> one kernel,
-    with no persist, no post-kernel reshaping and no union.
+    One plan for every caller: scan -> fan-out -> (salt shuffle) -> one
+    kernel, with no persist, no post-kernel reshaping and no union. Every
+    row pays the Arrow/Python cost exactly once.
 
-    ``skew_split=True`` (opt-in) routes oversized page-independent docs
-    (``_splittable_col(skew_threshold)``) through the chunk -> kernel ->
-    collect_list reassembly detour. The small/big split happens *before*
-    the Python kernel, so every row still pays the Arrow/Python cost
-    exactly once (a post-kernel filter-into-union would re-run the kernel
-    per branch — 2x the Python work).
+    ``skew_split`` only accepts ``False``, so callers that pass it keep
+    working; whales are not span-chunked, and ``True`` raises
+    ``ValueError``.
 
     ``keep_root=True`` appends a ``root_id`` column: the pre-fan-out input
     doc_id (== doc_id for non-archive rows). Only keep_root callers
     (checkpointing) pay the carry cost — the default path is byte-identical
-    to the plain 3-column kernel plan. It runs on the one-pass plan only:
-    combined with ``skew_split=True`` it raises ``ValueError``.
+    to the plain 3-column kernel plan.
     """
-    if skew_split and keep_root:
-        raise ValueError("keep_root=True requires skew_split=False")
+    if skew_split:
+        raise ValueError("skew_split=True is no longer supported: every "
+                         "document takes the one-pass plan")
     fanned = explode_archives_df(df, with_root=keep_root)
-
     if salt_partitions:
         fanned = fanned.repartition(
             salt_partitions, F.pmod(F.xxhash64("doc_id"), F.lit(salt_partitions))
         )
-
-    if skew_split:
-        # Both routing filters read the salted corpus. Catalyst pushes each
-        # branch's filter below the repartition Exchange, so the branches
-        # cannot share one exchange and the corpus would be scanned, fanned
-        # out and shuffled once per branch; persisting the salted corpus
-        # lets both read one materialized copy. Unsalted, each branch scans.
-        from pyspark.storagelevel import StorageLevel
-        if salt_partitions:
-            fanned = fanned.persist(StorageLevel.MEMORY_AND_DISK)
-        split = _splittable_col(skew_threshold)
-        small = fanned.filter(~split)
-        big = fanned.filter(split)
-    else:
-        small, big = fanned, None
-
-    def _meta_wrapped(meta_cols: list[str]):
-        def run(batches):
-            import pandas as pd
-            for batch in batches:
-                meta = batch[meta_cols].reset_index(drop=True)
-                res = next(_extract_batches(iter([batch]))).reset_index(drop=True)
-                yield pd.concat([res, meta], axis=1)
-        return run
-
     if keep_root:
-        small_schema = StructType(OUT_SCHEMA.fields + [_ROOT_FIELD])
-        return small.select(
+        return fanned.select(
             "doc_id", "spans", "status", "root_id"
-        ).mapInPandas(_meta_wrapped(["root_id"]), schema=small_schema
+        ).mapInPandas(
+            _extract_batches_with_root,
+            schema=StructType(OUT_SCHEMA.fields + [_ROOT_FIELD]),
         ).withColumn("root_id", F.coalesce("root_id", "doc_id"))
-
-    out_small = small.select("doc_id", "spans", "status").mapInPandas(
+    return fanned.select("doc_id", "spans", "status").mapInPandas(
         _extract_batches, schema=OUT_SCHEMA
     )
-    if big is None:
-        return out_small
-
-    # Oversized docs: chunk (already a shuffle by doc_id+chunk), extract
-    # each chunk independently, reassemble order-preserving.
-    chunks = _chunk_big(big)
-    out_schema = StructType(
-        OUT_SCHEMA.fields
-        + [StructField("chunk_id", IntegerType()),
-           StructField("n_chunks", IntegerType())]
-    )
-    out_big = chunks.select(
-        "doc_id", "spans", "status", "chunk_id", "n_chunks"
-    ).mapInPandas(_meta_wrapped(["chunk_id", "n_chunks"]), schema=out_schema)
-    return out_small.unionByName(_reassemble(out_big))

@@ -7,12 +7,13 @@ a continuously-ingesting extraction job:
   source) -> archive fan-out + the same Arrow-batched extraction kernel ->
   parquet sink with a streaming checkpoint. Exactly-once per input file via
   the file-source offset log + sink commit log: re-running with the same
-  checkpoint emits nothing new. ``skew_split=True`` routes each micro-batch
-  through ``foreachBatch`` so the full batch skew machinery (window-ranked
-  span chunking + reassembly — both unsupported on streaming DataFrames)
-  runs per trigger; exactly-once is preserved by writing every batch into
-  its own ``batch_id=N`` partition with dynamic overwrite, so a replayed
-  batch REPLACES its partition instead of appending duplicates.
+  checkpoint emits nothing new. ``stream_extract_files``,
+  ``stream_extract_urls`` and ``stream_extract_warc`` put their own ingest
+  in front of the same fan-out + kernel + sink tail.
+* ``stream_dedup_incremental`` — each micro-batch deduped against a static
+  snapshot through ``foreachBatch``; exactly-once because every batch is
+  written into its own ``batch_id=N`` partition with dynamic overwrite, so
+  a replayed batch REPLACES its partition instead of appending duplicates.
 * ``windowed_event_counts`` — event-time tumbling-window aggregation with a
   watermark for late data (append mode: only closed windows emit).
 * ``sessionize_stream`` — custom stateful operator via
@@ -36,9 +37,9 @@ from ..pipeline import DOC_SCHEMA, OUT_SCHEMA, explode_archives_df, _extract_bat
 SESSION_GAP_S = 1800
 
 
-def _skew_safe_sink(output_path: str, extract):
-    """foreachBatch sink running the batch extraction (incl. the skew
-    splitter) per micro-batch, idempotently.
+def _batch_overwrite_sink(output_path: str, transform):
+    """foreachBatch sink that runs a batch ``transform`` on each
+    micro-batch and writes it idempotently.
 
     foreachBatch is at-least-once on its own — a crash between the write
     and the offset commit replays the batch. Writing each batch into its
@@ -46,7 +47,7 @@ def _skew_safe_sink(output_path: str, extract):
     REPLACE the torn partition, restoring exactly-once without the file
     sink's commit log (which foreachBatch bypasses)."""
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (extract(batch_df)
+        (transform(batch_df)
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
@@ -62,42 +63,16 @@ def stream_extract_spans(
     checkpoint_path: str,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    skew_split: bool = False,
-    skew_threshold: int | None = None,
 ):
     """Streaming extraction: parquet file source -> kernel -> parquet sink.
 
-    ``skew_split=True``: a 400-page whale inside one micro-batch would
-    otherwise be one giant task; this routes the batch through
-    ``foreachBatch`` + pipeline.extract_spans_df so whales are span-chunked
-    across tasks and reassembled exactly as on the batch path."""
+    The batch plan per trigger (fan-out + one kernel); a whale inside a
+    micro-batch is one task, as on the batch path."""
     reader = spark.readStream.schema(DOC_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_path)
-    if skew_split:
-        from ..pipeline import extract_spans_df
-        kwargs = {} if skew_threshold is None else {
-            "skew_threshold": skew_threshold}
-        writer = docs.writeStream.foreachBatch(_skew_safe_sink(
-            output_path,
-            lambda b: extract_spans_df(b.select("doc_id", "spans"),
-                                       skew_split=True, **kwargs),
-        )).option("checkpointLocation", checkpoint_path)
-    else:
-        fanned = explode_archives_df(docs)
-        out = fanned.select("doc_id", "spans", "status").mapInPandas(
-            _extract_batches, schema=OUT_SCHEMA
-        )
-        writer = (
-            out.writeStream.format("parquet")
-            .option("path", output_path)
-            .option("checkpointLocation", checkpoint_path)
-            .outputMode("append")
-        )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_span_sink(reader.parquet(input_path), output_path,
+                            checkpoint_path, available_now)
 
 
 _BINARY_SCHEMA = StructType([
@@ -116,8 +91,6 @@ def stream_extract_files(
     validate: bool = False,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    skew_split: bool = False,
-    skew_threshold: int | None = None,
 ):
     """Streaming extraction over RAW FILES: ``binaryFile`` source -> byte
     ingest kernel (real zip/tar/ooxml/pdf parsing, ingest.py) -> JVM
@@ -128,29 +101,12 @@ def stream_extract_files(
     directory, get extracted span rows exactly-once per file (file-source
     offset log + sink commit log). ``validate=True`` applies the S6
     fail-closed MIME gate; quarantined files surface as error-status rows.
-    ``skew_split=True`` runs the batch skew splitter per micro-batch via
-    foreachBatch (see stream_extract_spans) — a whale PDF dropped into the
-    watch directory is chunked across tasks instead of pinning one core.
     """
-    from ..ingest import ingest_bytes_df
+    from ..ingest import ingest_bytes_df, named_binary_df
     reader = spark.readStream.format("binaryFile").schema(_BINARY_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    from ..ingest import named_binary_df
     named = named_binary_df(reader.load(input_path))
-    if skew_split:
-        from ..ingest import extract_from_bytes
-        kwargs = {} if skew_threshold is None else {
-            "skew_threshold": skew_threshold}
-        writer = named.writeStream.foreachBatch(_skew_safe_sink(
-            output_path,
-            lambda b: extract_from_bytes(b, validate=validate,
-                                         skew_split=True,
-                                         materialize=False, **kwargs),
-        )).option("checkpointLocation", checkpoint_path)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
     return _start_span_sink(ingest_bytes_df(named, validate=validate),
                             output_path, checkpoint_path, available_now)
 
@@ -318,7 +274,7 @@ def stream_dedup_incremental(
     ``foreachBatch`` because the operator composes aggregates and
     multi-way joins that streaming DataFrames cannot express
     incrementally; exactly-once via the per-batch dynamic-overwrite
-    partition pattern (``_skew_safe_sink`` — a replayed batch REPLACES
+    partition pattern (``_batch_overwrite_sink`` — a replayed batch REPLACES
     its batch_id partition). The snapshot artifacts (shingles, band
     keys, fingerprint set) are precomputed ONCE here and reused by every
     micro-batch — recomputing them per trigger would repeat the full
@@ -336,7 +292,7 @@ def stream_dedup_incremental(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     docs = reader.parquet(input_path)
-    writer = docs.writeStream.foreachBatch(_skew_safe_sink(
+    writer = docs.writeStream.foreachBatch(_batch_overwrite_sink(
         output_path,
         lambda b: snapshot_dedup(b, snapshot, threshold,
                                  snap_tables=snap_tables),

@@ -436,10 +436,9 @@ def extract_from_urls(df: DataFrame, fetch,
     """Full URL pipeline: validate+fetch+route -> JVM fan-out ->
     extraction kernel, mirroring ingest.extract_from_bytes.
 
-    The ingest output is persisted (MEMORY_AND_DISK). The default
-    one-pass extraction plan reads it once; the cache keeps a second
-    action on the result, or the opt-in ``skew_split=True`` route with
-    its two paths, from FETCHING each URL again — wrong for a
+    The ingest output is persisted (MEMORY_AND_DISK). The one-pass
+    extraction plan reads it once; the cache keeps a second action on
+    the result from FETCHING each URL again — wrong for a
     side-effecting network tier. The cache is not released here (the
     result is lazy): looping callers pass ``cache_registry=`` and free
     each job via ``ingest.release_caches(registry)``; the handle also

@@ -200,10 +200,9 @@ def extract_from_warc(df: DataFrame, cache_registry: list | None = None,
                       **kwargs) -> DataFrame:
     """Full WARC pipeline: record split + routing -> JVM fan-out ->
     extraction kernel, mirroring ingest.extract_from_bytes. The ingest
-    output is persisted; the default one-pass extraction plan reads it
-    once, and the cache keeps a second action on the result, or the
-    opt-in ``skew_split=True`` route with its two paths, from
-    decompressing and re-splitting each WARC again; looping
+    output is persisted; the one-pass extraction plan reads it once, and
+    the cache keeps a second action on the result from decompressing
+    and re-splitting each WARC again; looping
     drivers release via ``cache_registry=`` + ingest.release_caches, and
     the handle rides on the result as ``result.ingest_cache``."""
     from pyspark import StorageLevel

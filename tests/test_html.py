@@ -188,9 +188,8 @@ def test_find_img_srcs_document_order_cap_and_contexts():
 
 
 def test_single_span_giant_doc_is_linear_not_quadratic():
-    """A 20 MB single-span HTML doc is ONE extraction task (skew chunking
-    splits across spans, and byte-splitting inside a span would change
-    semantics: whole-payload encoding detection, stateful rawtext
+    """A 20 MB single-span HTML doc is ONE extraction task (every document
+    is, and byte-splitting inside a span would change semantics: whole-payload encoding detection, stateful rawtext
     tokenization). The bound that makes this acceptable at scale is
     kernel LINEARITY: ~3 s for 20 MB here, so even MAX_FILE_SIZE (100 MB)
     is a ~16 s straggler — one task among thousands, not a stage killer.

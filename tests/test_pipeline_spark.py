@@ -1,6 +1,6 @@
 """The correctness gate: distributed pipeline == single-process oracle on
-span-sequence equality (kind, text, media_ref, order) per document, plus
-skew-split equivalence and plan-shape checks."""
+span-sequence equality (kind, text, media_ref, order) per document, on
+ordinary, negative and oversized (whale) inputs, plus plan-shape checks."""
 
 import json
 
@@ -42,95 +42,60 @@ def test_span_sequence_equality(spark, corpus):
                              f"{got[mismatched[0]]} != {exp[mismatched[0]]}"
 
 
+def _pdf_page(page_no: int, text: str) -> str:
+    return json.dumps({"page_no": page_no, "blocks": [
+        {"bbox": [0, 0, 10, 5], "text": text}]})
+
+
+def _err_whale() -> dict:
+    """A 40-page page-only doc whose page 26 is not valid JSON."""
+    pages = [{"kind": "pdf_page", "text": _pdf_page(i + 1, f"line {i + 1}"),
+              "media_ref": None, "offset": i} for i in range(40)]
+    pages[25]["text"] = "{not valid json"
+    return {"doc_id": "err-skew", "spans": pages}
+
+
 def test_statuses_cover_negative_families(spark, corpus):
+    """Oracle equality on ordinary docs, negative families and whales:
+    60-page interleaved PDF docs (media glued to their pages) and a
+    40-page doc with one invalid page, which errors as a whole."""
     negatives = [
         {"doc_id": "neg-empty", "spans": [
             {"kind": "plain", "text": "", "media_ref": None, "offset": 0}]},
         {"doc_id": "neg-unsupported", "spans": [
             {"kind": "xyz", "text": "payload", "media_ref": None, "offset": 0}]},
     ]
-    docs = corpus[:20] + negatives
-    got = _spanify(extract_spans_df(corpus_to_df(spark, docs)).collect())
+    whales = [d for d in gen_corpus(400, seed=7)
+              if d["doc_id"].endswith("-skew")]
+    assert whales, "corpus must contain a skew doc"
+    docs = corpus[:20] + negatives + whales + [_err_whale()]
+    rows = extract_spans_df(corpus_to_df(spark, docs)).collect()
+    got = _spanify(rows)
     exp = _oracle(docs)
     assert got == exp
     assert got["neg-empty"][0] == "empty"
     assert got["neg-unsupported"][0] == "error: Unsupported file format: xyz"
     assert any(st == "ok" for st, _ in got.values())
-
-
-def test_skew_split_equivalence(spark):
-    # A 60-page interleaved PDF doc must extract identically whether the
-    # skew splitter is on or off (media spans glued to their pages).
-    docs = [d for d in gen_corpus(400, seed=7) if d["doc_id"].endswith("-skew")]
-    assert docs, "corpus must contain a skew doc"
-    df = corpus_to_df(spark, docs)
-    split = _spanify(
-        extract_spans_df(df, skew_split=True, skew_threshold=1).collect())
-    unsplit = _spanify(extract_spans_df(df, skew_split=False).collect())
-    assert split == unsplit
-    for st, spans in split.values():
-        assert st == "ok"
+    for w in whales:
+        st, spans = got[w["doc_id"]]
         kinds = [k for k, *_ in spans]
-        assert "media" in kinds and "text" in kinds
-
-
-def test_skew_split_salted_persist_path_equivalence(spark):
-    """salt_partitions + skew_split=True is the opt-in single-scan persist
-    route (the fanned table is materialized once and BOTH branches read
-    the cache): with a forced-big threshold the output must still equal
-    the unsplit and the unsalted-split runs exactly."""
-    corpus = gen_corpus(400, seed=7)
-    docs = ([d for d in corpus if d["doc_id"].endswith("-skew")]
-            + [d for d in corpus if not d["doc_id"].endswith("-skew")][:40])
-    assert any(d["doc_id"].endswith("-skew") for d in docs)
-    df = corpus_to_df(spark, docs)
-    salted_split = _spanify(
-        extract_spans_df(df, salt_partitions=8, skew_split=True,
-                         skew_threshold=1).collect())
-    plain_split = _spanify(
-        extract_spans_df(df, skew_split=True, skew_threshold=1).collect())
-    unsplit = _spanify(extract_spans_df(df, skew_split=False).collect())
-    assert salted_split == plain_split == unsplit
-
-
-def test_skew_split_equivalence_with_erroring_chunk(spark):
-    """An erroring chunk must poison the whole document exactly like the
-    unsplit kernel does (empty spans, zero counts) — split and unsplit
-    outputs stay indistinguishable even on error rows."""
-    pages = [
-        {"kind": "pdf_page",
-         "text": '{"page_no": %d, "blocks": [{"bbox": [0, %d, 10, %d], '
-                 '"text": "line %d"}]}' % (i + 1, i * 10, i * 10 + 5, i + 1),
-         "media_ref": None, "offset": i}
-        for i in range(40)
-    ]
-    bad = dict(pages[25])
-    bad["text"] = "{not valid json"
-    pages[25] = bad
-    docs = [{"doc_id": "err-skew", "spans": pages}]
-    df = corpus_to_df(spark, docs)
-    split = _spanify(
-        extract_spans_df(df, skew_split=True, skew_threshold=1).collect())
-    unsplit = _spanify(extract_spans_df(df, skew_split=False).collect())
-    assert split == unsplit
-    st, spans = split["err-skew"]
+        assert st == "ok" and "media" in kinds and "text" in kinds
+    st, spans = got["err-skew"]
     assert st.startswith("error:") and spans == []
-    row = extract_spans_df(df, skew_split=True, skew_threshold=1).collect()[0]
-    assert row["n_spans"] == 0 and row["n_chars"] == 0
+    err = next(r for r in rows if r["doc_id"] == "err-skew")
+    assert err["n_spans"] == 0 and err["n_chars"] == 0
 
 
-def _pdf_page(page_no: int, text: str) -> str:
-    return json.dumps({"page_no": page_no, "blocks": [
-        {"bbox": [0, 0, 10, 5], "text": text}]})
-
-
-def test_skew_split_rejects_keep_root(spark):
-    """keep_root (checkpointing) runs on the one-pass plan only; the
-    opt-in split route carries no root_id, so asking for both fails
-    before any plan is built."""
+def test_skew_split_true_is_rejected(spark):
+    """Whales are not span-chunked: ``skew_split=True`` raises before any
+    plan is built (the input is not even looked at)."""
     df = corpus_to_df(spark, gen_corpus(5, seed=7))
-    with pytest.raises(ValueError, match="keep_root"):
+    with pytest.raises(ValueError, match="skew_split"):
+        extract_spans_df(df, skew_split=True)
+    with pytest.raises(ValueError, match="skew_split"):
         extract_spans_df(df, keep_root=True, skew_split=True)
+    with pytest.raises(ValueError, match="skew_split"):
+        extract_spans_df(None, skew_split=True)
 
 
 def test_default_plan_is_one_pass(spark, corpus):

@@ -54,44 +54,6 @@ def test_stream_extract_incremental_files(spark, tmp_path):
     assert got.filter(F.col("doc_id").startswith("x")).count() >= 10
 
 
-def test_stream_skew_split_matches_batch_and_replays_idempotently(
-        spark, tmp_path):
-    """A whale doc in a micro-batch must be span-chunked across tasks like
-    the batch path (foreachBatch + the same splitter), produce identical
-    spans, and stay exactly-once across a re-run (per-batch dynamic
-    partition overwrite makes replays replace, not append)."""
-    from extract_text_spark.pipeline import extract_spans_df
-
-    whales = [d for d in gen_corpus(400, seed=7)
-              if d["doc_id"].endswith("-skew")]
-    assert whales, "corpus must contain a skew doc"
-    docs = whales + gen_corpus(30, seed=11)
-    inp, out, ckpt = (str(tmp_path / d) for d in ["in", "out", "ckpt"])
-    df = corpus_to_df(spark, docs)
-    df.write.parquet(inp)
-
-    q = stream_extract_spans(spark, inp, out, ckpt,
-                             skew_split=True, skew_threshold=1)
-    q.awaitTermination()
-
-    def spanify(rows):
-        return {r["doc_id"]: (r["status"],
-                              [(s["kind"], s["text"], s["media_ref"],
-                                s["offset"]) for s in r["spans"]])
-                for r in rows}
-
-    got = spanify(spark.read.parquet(out).collect())
-    exp = spanify(
-        extract_spans_df(df, skew_split=True, skew_threshold=1).collect())
-    assert got == exp
-
-    n1 = spark.read.parquet(out).count()
-    q2 = stream_extract_spans(spark, inp, out, ckpt,
-                              skew_split=True, skew_threshold=1)
-    q2.awaitTermination()
-    assert spark.read.parquet(out).count() == n1
-
-
 def test_windowed_counts_match_batch(spark, tmp_path):
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     inp = str(tmp_path / "ev")
@@ -270,6 +232,22 @@ def test_stream_dedup_incremental(spark, tmp_path):
                              threshold=0.2).awaitTermination()
     rows = {r.doc_id: r for r in spark.read.parquet(out).collect()}
     assert len(rows) == n1 + 1 and rows[15].keep
+
+
+def test_batch_overwrite_sink_replay_replaces(spark, tmp_path):
+    """A replayed foreachBatch call (same batch_id, as after a crash
+    before the offset commit) replaces its batch_id partition instead of
+    appending duplicates; other batches' partitions are untouched."""
+    from extract_text_spark.streaming.stream import _batch_overwrite_sink
+
+    out = str(tmp_path / "out")
+    sink = _batch_overwrite_sink(out, lambda b: b)
+    b0 = spark.createDataFrame([(1,), (2,)], "x long")
+    sink(b0, 0)
+    sink(spark.createDataFrame([(3,)], "x long"), 1)
+    sink(b0, 0)
+    got = sorted((r.batch_id, r.x) for r in spark.read.parquet(out).collect())
+    assert got == [(0, 1), (0, 2), (1, 3)]
 
 
 def test_stream_extract_warc(spark, tmp_path):

@@ -211,8 +211,8 @@ Reference baseline context: the reference publishes no docs/sec figures
 (BASELINE.md); its envelope is a 4-thread pool with <5 s per simple file.
 This engine's single-node throughput above corresponds to
 {tps_big:.0f} docs/sec at {n_big} cores on the mixed-format corpus
-(with 1-in-~1200 docs being 400-page "whale" PDFs that exercise the
-span-chunk skew splitter for real).
+(with 1-in-~1200 docs being 400-page "whale" PDFs, each extracted as
+one task while the salted partitions keep the other cores busy).
 
 ## Bench protocol history (cross-round comparability)
 
@@ -266,9 +266,9 @@ oversubscribed, so wall-clock above ~8-12 threads measures contention, not
 the engine. The same extraction job at local[8] vs local[32] is flat,
 while 2 -> 8 cores scales per the table above. On a real 1000-executor
 cluster the relevant property is the one evidenced here: the job has no
-serial section beyond Spark's scheduler — scan, fan-out, salt shuffle,
-kernel and reassembly are all data-parallel, shuffles are keyed on
-uniform hashes, and the skew splitter bounds the largest single task.
+serial section beyond Spark's scheduler — scan, fan-out, salt shuffle
+and kernel are all data-parallel, shuffles are keyed on uniform hashes,
+and the largest single task is one document.
 
 ## Optimization log (what made it scale)
 
