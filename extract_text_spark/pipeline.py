@@ -4,7 +4,8 @@ Stages (all declarative except the extraction kernel itself):
 
 1. **Archive fan-out** — ≤3 bounded rounds of pure Catalyst ops
    (``from_json`` + ``explode`` + regexp path sanitation + guard filters),
-   reproducing A1-A8 of SURVEY.md §2.3 JVM-side with no Python.
+   reproducing A1-A8 of SURVEY.md §2.3 JVM-side with no Python. The
+   fan-out expression is built once per JVM and reused by every plan.
 2. **Salted repartition** — ``repartition(pmod(xxhash64(doc_id), P))``
    spreads hot doc_ids; with P at several partitions per core, idle cores
    take the remaining tasks while an oversized document runs, and with
@@ -28,9 +29,11 @@ n_spans, n_chars, bytes_in)``.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, BooleanType, IntegerType, LongType, StringType, StructField,
@@ -188,29 +191,17 @@ def _expand_archive(doc_id: Column, members: Column, depth: int) -> Column:
     ).otherwise(expanded)
 
 
-def explode_archives_df(df: DataFrame, with_root: bool = False) -> DataFrame:
-    """A1-A6 archive fan-out in ONE scan: a single nested-transform
-    expression computes every fan-out level (bounded depth 3) per row, then
-    one ``posexplode`` emits the documents — no unions, no repeated scans.
-    Path sanitation (A7), system-file filter (A8) and the 100 MB bomb guard
-    (A2) are inlined as column predicates; guard-rejected rows surface with
-    a non-null ``status``.
+@functools.lru_cache(maxsize=1)
+def _fanout_docs(gateway: object) -> Column:
+    """The per-row fan-out expression: ``(doc_id, spans, status)`` ->
+    ``array<doc>`` over every nesting level.
 
-    ``with_root=True`` adds a ``root_id`` column carrying the pre-fan-out
-    input doc_id (null when unchanged — i.e. for non-archive rows — so the
-    mostly-null column shuffles for free). Checkpointing buckets by root so
-    fan-out children land in their parent's bucket even when input doc_ids
-    themselves contain ``/``.
+    It depends on no data, only on column names, yet building it costs
+    about 5,000 py4j round trips (three inlined levels of lambdas, path
+    sanitation and system-file markers per level). So it is built once per
+    py4j ``gateway`` (used only as the memo key) and reused by every plan;
+    a restarted JVM comes with a new gateway and gets a fresh build.
     """
-    if "status" not in df.columns:
-        df = df.withColumn("status", F.lit(None).cast(StringType()))
-    # Fail-closed on malformed rows: a null spans array would null-propagate
-    # through the fan-out expression and the document would vanish from the
-    # output silently; coalesce to empty so it surfaces as status='empty'.
-    df = df.withColumn(
-        "spans", F.coalesce("spans", F.array().cast(SPANS_TYPE.simpleString()))
-    )
-
     arch = F.array_sort(
         F.filter("spans", lambda s: s.kind == F.lit("archive_member")),
         lambda a, b: F.when(a.offset < b.offset, -1)
@@ -235,12 +226,37 @@ def explode_archives_df(df: DataFrame, with_root: bool = False) -> DataFrame:
                                   lambda mp: _expand_member(doc_id, mp, 1))),
         )
     )
-    out_docs = F.when(
+    return F.when(
         (F.size(arch) == 0) | status.isNotNull(), passthrough
     ).otherwise(fanned)
 
+
+def explode_archives_df(df: DataFrame, with_root: bool = False) -> DataFrame:
+    """A1-A6 archive fan-out in ONE scan: a single nested-transform
+    expression computes every fan-out level (bounded depth 3) per row, then
+    one ``explode`` emits the documents — no unions, no repeated scans.
+    Path sanitation (A7), system-file filter (A8) and the 100 MB bomb guard
+    (A2) are inlined as column predicates; guard-rejected rows surface with
+    a non-null ``status``.
+
+    ``with_root=True`` adds a ``root_id`` column carrying the pre-fan-out
+    input doc_id (null when unchanged — i.e. for non-archive rows — so the
+    mostly-null column shuffles for free). Checkpointing buckets by root so
+    fan-out children land in their parent's bucket even when input doc_ids
+    themselves contain ``/``.
+    """
+    if "status" not in df.columns:
+        df = df.withColumn("status", F.lit(None).cast(StringType()))
+    # Fail-closed on malformed rows: a null spans array would null-propagate
+    # through the fan-out expression and the document would vanish from the
+    # output silently; coalesce to empty so it surfaces as status='empty'.
+    df = df.withColumn(
+        "spans", F.coalesce("spans", F.array().cast(SPANS_TYPE.simpleString()))
+    )
+
     out = (
-        df.select(F.col("doc_id").alias("_root"), F.explode(out_docs).alias("d"))
+        df.select(F.col("doc_id").alias("_root"),
+                  F.explode(_fanout_docs(SparkContext._gateway)).alias("d"))
         .select(
             "d.doc_id", "d.spans", "d.status",
             F.when(F.col("d.doc_id") != F.col("_root"), F.col("_root"))

@@ -151,3 +151,59 @@ def test_null_spans_surface_as_empty_not_dropped(spark):
                                 schema=DOC_SCHEMA)
     res = {r["doc_id"]: r["status"] for r in extract_spans_df(bad).collect()}
     assert res == {"nullspans": "empty", "nospans": "empty"}
+
+
+def _archive_docs():
+    return [d for d in gen_corpus(200, seed=11) if "-archive" in d["doc_id"]]
+
+
+def test_second_build_reuses_fanout_expression(spark):
+    """The data-independent fan-out expression is built once per JVM: a
+    second ``extract_spans_df`` build on the same input makes a few hundred
+    py4j round trips, not the ~5,000 of building the expression again."""
+    import gc
+
+    from pyspark import SparkContext
+    df = corpus_to_df(spark, _archive_docs())
+    extract_spans_df(df, salt_partitions=8)
+    gc.collect()  # release the first plan's JVM handles outside the count
+    client = SparkContext._gateway._gateway_client
+    send, calls = client.send_command, [0]
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        extract_spans_df(df, salt_partitions=8)
+    finally:
+        del client.send_command
+    assert 0 < calls[0] <= 1000, calls[0]
+
+
+def test_consecutive_builds_give_equal_output(spark):
+    """A plan built around the memoized expression returns what the first
+    plan did, on archive-bearing input with fan-out children."""
+    df = corpus_to_df(spark, _archive_docs())
+    first = sorted(extract_spans_df(df).collect())
+    second = sorted(extract_spans_df(df).collect())
+    assert first == second
+    assert any("/" in r["doc_id"] for r in first)
+
+
+def test_fanout_memo_rebuilds_for_a_new_gateway(spark):
+    """One memo entry, keyed on the gateway: another key builds a new
+    expression and evicts the old one, so the next call with the live
+    gateway builds again."""
+    from pyspark import SparkContext
+    from extract_text_spark.pipeline import _fanout_docs
+    gateway = SparkContext._gateway
+    live = _fanout_docs(gateway)
+    assert _fanout_docs(gateway) is live
+    other = _fanout_docs(object())
+    assert other is not live
+    assert _fanout_docs.cache_info().currsize == 1
+    rebuilt = _fanout_docs(gateway)
+    assert rebuilt is not live and rebuilt is not other
+    assert _fanout_docs(gateway) is rebuilt
