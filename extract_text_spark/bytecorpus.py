@@ -1192,9 +1192,8 @@ def make_rar5(entries: dict[str, bytes], with_dir: str | None = None) -> bytes:
     """Real RAR5 container, STORE method (rarlab technote block layout:
     vint-framed Main/File/End headers; compression-info method bits 0).
     ``with_dir`` adds a directory entry (file flag 0x01) that the walk
-    must skip. Read back by extractors.arclite.rar5_members — and by the
-    real ``rarfile`` where installed (rarfile cannot WRITE archives, which
-    is why this writer exists)."""
+    must skip. Read back by extractors.arclite.rar5_members (this writer
+    exists because no stdlib or installed library writes RAR)."""
     import struct
     import zlib
     from .extractors.arclite import RAR5_SIG
@@ -1244,8 +1243,7 @@ def make_7z(entries: dict[str, bytes], coder: str = "copy") -> bytes:
     chains real 7-Zip emits — "delta-lzma2" (Delta dist 4 then LZMA2) and
     "bcj-lzma1" (BCJ x86 then LZMA1): the folder carries two coders with
     a bind pair feeding the compressor's output into the filter's input.
-    Read back by extractors.arclite.sevenz_members and by py7zr where
-    installed."""
+    Read back by extractors.arclite.sevenz_members."""
     import struct
     import zlib
     from .extractors.arclite import SEVENZ_SIG, write_num7 as num

@@ -1,11 +1,12 @@
-"""Minimal from-scratch RAR5 and 7z readers — the vendored fallback that
-executes the archive member walk when the optional ``rarfile`` / ``py7zr``
-libraries are absent (they are in this sandbox).
+"""Minimal from-scratch RAR5 and 7z readers — the engine's only RAR/7z
+decoders; ingest's archive member walk calls them directly.
 
-The reference delegates these formats to the libraries
-(/root/reference/app/extractors.py:1812-1885 rar, :1887-1959 7z); the walk
-semantics (member names, dir skip, bytes, recursion) are identical — only
-the container decode differs. Modeled subsets, chosen to cover what real
+The reference delegates these formats to the ``rarfile`` / ``py7zr``
+libraries (reference app/extractors.py:1812-1885 rar, :1887-1959 7z);
+the walk semantics (member names, dir skip, bytes, recursion) are
+identical — only the container decode differs. Containers outside the
+modeled subsets fail closed with a per-file error where the reference's
+libraries would decode them. Modeled subsets, chosen to cover what real
 writers emit:
 
 * RAR5 (rarlab technote): vint block stream, File headers (type 2) with
@@ -94,7 +95,7 @@ def rar5_members(content: bytes) -> list[tuple[str, bytes, int]]:
                 if method != 0:
                     raise ValueError(
                         f"RAR compression method {method} not supported by "
-                        "the vendored stored-method reader (install rarfile)")
+                        "the vendored stored-method reader")
                 data = content[hstart + hsize:hstart + hsize + data_size]
                 out.append((name, data, unpacked))
         pos = hstart + hsize + data_size
@@ -227,7 +228,7 @@ def _resolve_chain(f: dict) -> list[int]:
     if any(c["nin"] != 1 or c["nout"] != 1 for c in coders):
         raise ValueError(
             "7z multi-stream coders (BCJ2) not supported by the vendored "
-            "reader (install py7zr)")
+            "reader")
     bound_in = {i for i, _o in f["bind_pairs"]}
     bound_out = {o for _i, o in f["bind_pairs"]}
     starts = [i for i in range(len(coders)) if i not in bound_in]
@@ -382,8 +383,7 @@ def _decode_coder(cid: bytes, props: bytes, packed: bytes,
         out = dec.decompress(packed, max_length=unpack_size)
         return out[:unpack_size]
     raise ValueError(
-        f"7z coder {cid.hex()} not supported by the vendored reader "
-        "(install py7zr)")
+        f"7z coder {cid.hex()} not supported by the vendored reader")
 
 
 def _lzma_filter_spec(coder: dict) -> dict:
@@ -391,7 +391,7 @@ def _lzma_filter_spec(coder: dict) -> dict:
     whole chain is LZMA-family (LZMA1/LZMA2 compressors, Delta / BCJ x86
     branch filters — the chains real 7-Zip emits for executables and
     binary tables). Chains the stdlib cannot express raise the same
-    install-py7zr error as unknown coders."""
+    not-supported error as unknown coders."""
     import lzma
     cid, props = coder["id"], coder["props"]
     if cid == b"\x21":
@@ -413,7 +413,7 @@ def _lzma_filter_spec(coder: dict) -> dict:
         return {"id": lzma.FILTER_X86}
     raise ValueError(
         f"7z coder chain with {cid.hex()} not supported by the vendored "
-        "reader (install py7zr)")
+        "reader")
 
 
 def _decode_folder(f: dict, packed: bytes) -> bytes:

@@ -10,9 +10,8 @@ All semantics replicated from the reference:
   ``{path.tag}: {stripped_text}`` for non-blank element text, then
   ``{path.tag}@{attr}: {value}`` for non-blank attributes, then children.
 * YAML (app/extractors.py:1028-1070): safe-load then the JSON-style
-  string-leaf walk. PyYAML is not assumed present: a from-scratch parser for
-  the indentation subset used by the corpus (nested maps, block lists,
-  quoted/plain scalars) is used when the library is unavailable.
+  string-leaf walk. PyYAML is a required worker dependency, as in the
+  reference.
 * CSV (app/extractors.py:494-505): ``pd.read_csv`` -> ``to_csv(index=False)``
   normalization round-trip (pandas is available on executors).
 * Spreadsheet (app/extractors.py:475-492): per sheet ``[Sheet: {name}]``
@@ -28,11 +27,7 @@ import json
 import xml.etree.ElementTree as ET
 
 import pandas as pd
-
-try:  # optional; the subset parser below is the fallback
-    import yaml as _yaml
-except ImportError:  # pragma: no cover
-    _yaml = None
+import yaml
 
 
 # -- JSON -------------------------------------------------------------------
@@ -80,86 +75,9 @@ def extract_xml(payload: str) -> str:
 
 # -- YAML -------------------------------------------------------------------
 
-def _parse_scalar(tok: str):
-    tok = tok.strip()
-    if not tok:
-        return None
-    if tok[0] in "\"'" and tok[-1] == tok[0] and len(tok) >= 2:
-        return tok[1:-1]
-    low = tok.lower()
-    if low in ("null", "~"):
-        return None
-    if low == "true":
-        return True
-    if low == "false":
-        return False
-    try:
-        return int(tok)
-    except ValueError:
-        pass
-    try:
-        return float(tok)
-    except ValueError:
-        pass
-    return tok
-
-
-def _mini_yaml_load(payload: str):
-    """Indentation-subset YAML parser (nested maps, block lists, scalars)."""
-    lines = [
-        (len(ln) - len(ln.lstrip(" ")), ln.strip())
-        for ln in payload.split("\n")
-        if ln.strip() and not ln.strip().startswith("#")
-    ]
-
-    def parse(idx: int, indent: int):
-        if idx >= len(lines):
-            return None, idx
-        if lines[idx][1].startswith("- "):
-            seq = []
-            while idx < len(lines) and lines[idx][0] == indent and lines[idx][1].startswith("- "):
-                item = lines[idx][1][2:]
-                if ":" in item and not item.lstrip().startswith(("'", '"')):
-                    # inline "key: value" opening a nested map entry
-                    key, _, rest = item.partition(":")
-                    sub = {key.strip(): _parse_scalar(rest)}
-                    idx += 1
-                    while idx < len(lines) and lines[idx][0] > indent and not lines[idx][1].startswith("- "):
-                        k, _, v = lines[idx][1].partition(":")
-                        sub[k.strip()] = _parse_scalar(v)
-                        idx += 1
-                    seq.append(sub)
-                else:
-                    seq.append(_parse_scalar(item))
-                    idx += 1
-            return seq, idx
-        mapping = {}
-        while idx < len(lines) and lines[idx][0] == indent:
-            text = lines[idx][1]
-            if text.startswith("- "):
-                break
-            key, _, rest = text.partition(":")
-            key = key.strip()
-            if rest.strip():
-                mapping[key] = _parse_scalar(rest)
-                idx += 1
-            else:
-                idx += 1
-                if idx < len(lines) and lines[idx][0] > indent:
-                    value, idx = parse(idx, lines[idx][0])
-                    mapping[key] = value
-                else:
-                    mapping[key] = None
-        return mapping, idx
-
-    data, _ = parse(0, lines[0][0] if lines else 0)
-    return data
-
-
 def extract_yaml(payload: str) -> str:
     """E16 — safe-load then string-leaf walk with dotted/indexed paths."""
-    data = _yaml.safe_load(payload) if _yaml is not None else _mini_yaml_load(payload)
-    return "\n".join(_json_strings(data))
+    return "\n".join(_json_strings(yaml.safe_load(payload)))
 
 
 # -- CSV / spreadsheet ------------------------------------------------------

@@ -60,21 +60,21 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _shingled(df: DataFrame, id_col: str, text_col: str,
-              cache: bool = True) -> DataFrame:
-    """(id, distinct shingles) table. The LSH/Jaccard pipelines read it
-    three times (index/signatures, then both sides of the verification
-    join); computing the 3-gram concat per read tripled wall time (40s ->
-    16.6s at sf0.1 when cached), so it persists MEMORY_AND_DISK by default.
-    Spark's ContextCleaner unpersists once the plan is unreferenced; pass
-    ``cache=False`` when the corpus dwarfs cluster storage and recompute
-    is cheaper than spill.
+def _shingled(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, distinct shingles) table, persisted MEMORY_AND_DISK. The
+    LSH/Jaccard pipelines read it three times (index/signatures, then both
+    sides of the verification join); computing the 3-gram concat per read
+    tripled wall time (40s -> 16.6s at sf0.1 when cached).
+
+    Nothing releases the persist: Spark's CacheManager holds the cached
+    plan until ``unpersist()``/``spark.catalog.clearCache()``, however
+    unreferenced the DataFrame becomes on the driver, so every call leaves
+    one more persisted shingle table for the life of the session.
     """
     from pyspark.storagelevel import StorageLevel
-    s = df.select(
+    return df.select(
         F.col(id_col).alias("id"), shingles_col(text_col).alias("sh")
-    ).filter(F.size("sh") > 0)
-    return s.persist(StorageLevel.MEMORY_AND_DISK) if cache else s
+    ).filter(F.size("sh") > 0).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def ngram_jaccard_pairs(df: DataFrame, threshold: float,
@@ -785,7 +785,7 @@ def shingle_band_tables(df: DataFrame, id_col: str = "doc_id",
     side is reused across many calls — the streaming twin reuses the
     static snapshot every micro-batch, and recomputing (and re-persisting)
     it per trigger repeats the snapshot's full shingle/signature work N
-    times (the unbounded-cache hazard ingest.py documents)."""
+    times and leaves N persisted shingle tables (see ``_shingled``)."""
     r = k // bands
     s = _shingled(df, id_col, text_col)
     sig = s.withColumn("hp", minhash_hash_pairs_col(F.col("sh")))

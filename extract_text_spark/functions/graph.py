@@ -46,7 +46,8 @@ def pagerank(edges: DataFrame, iters: int = 2,
     # one row per host, read by the count plus every iteration's rank
     # rebuild — persist so the endpoint union+distinct shuffle (the most
     # expensive stage on a billion-edge graph) runs once, not iters+1
-    # times; ContextCleaner reclaims it once the plan is unreferenced
+    # times; the cache stays until the session unpersists it (Spark's
+    # CacheManager keeps it past the last driver reference)
     nodes = (edges.select(src).union(edges.select(dst)).distinct()
              .persist(StorageLevel.MEMORY_AND_DISK))
     n = nodes.count()  # one scalar; the only driver-side value

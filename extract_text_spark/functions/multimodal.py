@@ -801,35 +801,6 @@ def _png_unfilter(data: bytes, pos: int, w: int, h: int,
     return out, pos
 
 
-# PNG color type -> the Pillow mode whose tobytes() layout equals the
-# from-scratch unfiltered raster (palette stays mode 'P' so tobytes()
-# yields the raw INDICES and our own range check + gather still run).
-_PIL_PNG_MODES = {0: "L", 2: "RGB", 3: "P", 4: "LA", 6: "RGBA"}
-
-
-def _pil_png_raster(payload: bytes, w: int, h: int,
-                    color: int) -> bytes | None:
-    """Unfiltered depth-8 raster via Pillow, or None when Pillow is
-    absent, the mode is unexpected, or Pillow fails in any way — the
-    caller then takes the from-scratch loops, so the hatch can only
-    ever REPLACE per-pixel Python, never change a result (validation
-    already happened from scratch; see decode_png_pixels)."""
-    try:
-        from PIL import Image
-    except ImportError:
-        return None
-    import io as _io
-    try:
-        img = Image.open(_io.BytesIO(payload), formats=("PNG",))
-        img.load()
-        if img.mode != _PIL_PNG_MODES[color] or img.size != (w, h):
-            return None
-        raw = img.tobytes()
-    except Exception:
-        return None
-    return raw if len(raw) == h * w * _PNG_BPP[color] else None
-
-
 def decode_png_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
     """REAL PNG raster decode with stdlib zlib only: chunk walk ->
     concatenated IDAT inflate (stored AND Huffman deflate both land in
@@ -906,27 +877,6 @@ def decode_png_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
         raise DecoderUnavailable(f"IDAT inflate failed: {exc}") from exc
     if len(data) > expected:
         raise DecoderUnavailable("IDAT inflates past the scanline layout")
-    # Library escape hatch (Pillow, when importable): the stream has
-    # already passed the EXACT from-scratch validation above, so only
-    # the per-byte unfilter/deinterlace loops are delegated; any PIL
-    # surprise falls back to the from-scratch path below, and the
-    # palette/16-bit normalization (with its index range check) stays
-    # ours either way — behavior is byte-identical with or without the
-    # library, PIL only removes the per-pixel Python at production
-    # scale. No-PIL sandboxes skip this block entirely.
-    if depth == 8 and len(data) == expected:
-        pil = _pil_png_raster(payload, w, h, color)
-        if pil is not None:
-            out = pil
-            if color == 3:
-                import numpy as np
-                n = len(plte) // 3
-                idx = np.frombuffer(out, dtype=np.uint8)
-                if idx.size and int(idx.max()) >= n:
-                    raise DecoderUnavailable("palette index out of range")
-                pal = np.frombuffer(plte, dtype=np.uint8).reshape(n, 3)
-                return w, h, 3, pal[idx].tobytes()
-            return w, h, _PNG_BPP[color], bytes(out)
     if interlace == 0:
         if len(data) != h * (stride + 1):
             raise DecoderUnavailable("IDAT length != h*(stride+1)")

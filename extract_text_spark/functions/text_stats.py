@@ -520,9 +520,9 @@ def ccnet_buckets(df, id_col: str = "doc_id",
     the documented single-partition window, same bound as
     ``sample_split``'s cumulative ranges), the two cuts plus N reduce
     to ONE row that broadcasts back, and the corpus itself never
-    shuffles — zero driver state. The scored input is persisted for the
-    duration (the pagerank pattern: ContextCleaner reclaims it once the
-    returned plan is unreferenced), because it feeds BOTH the
+    shuffles — zero driver state. The scored input is persisted (the
+    pagerank pattern; the cache stays until the session unpersists it,
+    past the last driver reference), because it feeds BOTH the
     distribution pass and the final assignment — without the persist an
     expensive upstream scoring chain (e.g. rarity) would re-execute
     once per reference.

@@ -7,10 +7,11 @@ binary)`` rows — and this module parses the *real* containers:
 * **archives** — zip via stdlib ``zipfile``, the tar family via ``tarfile``
   (``r:*`` transparently handles gz/bz2/xz, and rejects bare non-tar
   streams exactly like the reference's ``tarfile.open(..., "r:*")`` does),
-  rar/7z behind import-tries with the reference's optional-dependency
-  errors. Members become the ``archive_member`` span model the existing
-  single-scan JVM fan-out consumes (pipeline.explode_archives_df), so the
-  distributed fan-out/sanitize/filter/bomb machinery is unchanged.
+  rar/7z via the vendored readers in extractors.arclite (stored-method
+  RAR5; the 7z coder subset listed there). Members become the
+  ``archive_member`` span model the existing single-scan JVM fan-out
+  consumes (pipeline.explode_archives_df), so the distributed
+  fan-out/sanitize/filter/bomb machinery is unchanged.
   Reference loops: app/extractors.py:1575-1959.
 * **zip-of-XML documents** — docx/xlsx/pptx/odt/epub parsed by
   extractors.ooxml into the pinned part-payload models.
@@ -50,6 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .config import MAX_ARCHIVE_NESTING, MAX_ARCHIVE_SIZE, MAX_EXTRACTED_SIZE
+from .extractors.arclite import rar5_members, sevenz_members
 from .extractors.archive import is_system_file, sanitize_archive_filename
 from .extractors.ooxml import (
     docx_payload_from_bytes,
@@ -63,15 +65,6 @@ from .pipeline import SPANS_TYPE
 
 if TYPE_CHECKING:
     import pandas as pd
-
-try:  # optional, mirroring the reference's soft deps
-    import rarfile  # type: ignore
-except ImportError:  # pragma: no cover
-    rarfile = None
-try:
-    import py7zr  # type: ignore
-except ImportError:  # pragma: no cover
-    py7zr = None
 
 
 # ---------------------------------------------------------------------------
@@ -583,50 +576,24 @@ def _tar_members(content: bytes, depth: int) -> list[dict]:
 
 
 def _rar_members(content: bytes, depth: int) -> list[dict]:
-    if not rarfile:
-        # vendored fallback: stored-method RAR5 walk without the optional
-        # dep (extractors/arclite.py); the library path below is identical
-        # in walk semantics (app/extractors.py:1812-1885)
-        from .extractors.arclite import rar5_members
-        return _members_from_entries(
-            ((name, size, lambda d=data: d)
-             for name, data, size in rar5_members(content)),
-            "rar", depth)
-    try:  # pragma: no cover - optional dependency
-        rf = rarfile.RarFile(io.BytesIO(content))
-    except rarfile.Error:
-        raise ValueError("Invalid RAR file") from None
-    with rf:
-        return _members_from_entries(
-            ((i.filename, i.file_size, lambda i=i: rf.read(i))
-             for i in rf.infolist() if not i.is_dir()),
-            "rar", depth)
+    """Stored-method RAR5 walk through the vendored reader
+    (extractors/arclite.py); walk semantics follow
+    app/extractors.py:1812-1885."""
+    return _members_from_entries(
+        ((name, size, lambda d=data: d)
+         for name, data, size in rar5_members(content)),
+        "rar", depth)
 
 
 def _7z_members(content: bytes, depth: int) -> list[dict]:
-    if not py7zr:
-        # vendored fallback: Copy/LZMA1/LZMA2/BZip2 single-coder 7z walk
-        # without the optional dep (extractors/arclite.py); the declared-
-        # size cap fires on header metadata before any decompression
-        from .extractors.arclite import sevenz_members
-        return _members_from_entries(
-            ((name, len(data), lambda d=data: d)
-             for name, data in sevenz_members(
-                 content, max_total=MAX_EXTRACTED_SIZE)),
-            "7z", depth)
-    try:  # pragma: no cover - optional dependency
-        sz = py7zr.SevenZipFile(io.BytesIO(content))
-    except py7zr.Bad7zFile:
-        raise ValueError("Invalid 7Z file") from None
-    with sz:
-        sizes = {i.filename: i.uncompressed for i in sz.list()
-                 if not i.is_directory}
-        blobs = sz.readall() or {}
-        return _members_from_entries(
-            ((name, sizes.get(name, len(bio.getbuffer())),
-              lambda bio=bio: bio.read())
-             for name, bio in blobs.items()),
-            "7z", depth)
+    """7z walk through the vendored reader (extractors/arclite.py); the
+    declared-size cap fires on header metadata before any decompression
+    (app/extractors.py:1887-1959)."""
+    return _members_from_entries(
+        ((name, len(data), lambda d=data: d)
+         for name, data in sevenz_members(
+             content, max_total=MAX_EXTRACTED_SIZE)),
+        "7z", depth)
 
 
 _TAR_FAMILY = {"tar", "gz", "bz2", "xz", "tar.gz", "tar.bz2", "tar.xz",

@@ -4170,9 +4170,9 @@ SELECT doc_id, 'ok' AS status, extracted FROM kids ORDER BY doc_id
 def ext_rar7z_fanout(spark, sf_dir):
     """Real RAR5/7z bytes (A4/A5) through the vendored from-scratch
     readers (extractors/arclite.py; the reference walks these with
-    rarfile/py7zr, app/extractors.py:1812-1959 — absent here, so the
-    fallback executes): even docs are stored-method RAR5 with a skipped
-    directory entry, odd docs are 7z cycling Copy / raw-LZMA2 /
+    rarfile/py7zr, app/extractors.py:1812-1959): even docs are
+    stored-method RAR5 with a skipped directory entry, odd docs are 7z
+    cycling Copy / raw-LZMA2 /
     Delta+LZMA2 / BCJ-x86+LZMA1 coders (the last two are two-coder
     bind-pair filter chains), all fanned out JVM-side like every
     archive."""

@@ -32,7 +32,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..pipeline import DOC_SCHEMA, OUT_SCHEMA, explode_archives_df, _extract_batches
+from ..pipeline import DOC_SCHEMA, extract_spans_df
 
 SESSION_GAP_S = 1800
 
@@ -113,15 +113,12 @@ def stream_extract_files(
 
 def _start_span_sink(ingested: DataFrame, output_path: str,
                      checkpoint_path: str, available_now: bool):
-    """Shared streaming tail: span-model docs -> JVM fan-out -> extraction
-    kernel -> append parquet sink. One place owns the sink shape for every
-    streaming source (files, URLs, span tables)."""
-    fanned = explode_archives_df(ingested)
-    out = fanned.select("doc_id", "spans", "status").mapInPandas(
-        _extract_batches, schema=OUT_SCHEMA
-    )
+    """Shared streaming tail: span-model docs -> ``extract_spans_df`` (the
+    batch plan, unsalted: JVM fan-out -> extraction kernel) -> append
+    parquet sink. One place owns the sink shape for every streaming source
+    (files, URLs, span tables)."""
     writer = (
-        out.writeStream.format("parquet")
+        extract_spans_df(ingested).writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")

@@ -627,36 +627,6 @@ def test_semantic_dedup_cluster_size_cap(spark):
     assert {i for i, r in plain.items() if r.keep} == {0, 1}
 
 
-def test_pil_png_decode_parity():
-    """When Pillow is importable, the library escape hatch must decode
-    the fixture rasters byte-identically to the from-scratch loops
-    (skipped in no-PIL sandboxes — the hatch is a production fast path,
-    never a behavior change)."""
-    import pytest
-
-    pytest.importorskip("PIL")
-
-    from extract_text_spark import bytecorpus
-    from extract_text_spark.functions import multimodal as mm
-
-    fixtures = [
-        bytecorpus.make_png(4, 2),
-        bytecorpus.make_png(3, 3, color=2),
-        bytecorpus.make_png(9, 5, color=3),
-        bytecorpus.make_png(13, 7, interlace=1),
-        bytecorpus.make_png(9, 5, color=3, interlace=1),
-    ]
-    for png in fixtures:
-        with_pil = mm.decode_png_pixels(png)
-        real = mm._pil_png_raster
-        try:
-            mm._pil_png_raster = lambda *a, **k: None   # force from-scratch
-            scratch = mm.decode_png_pixels(png)
-        finally:
-            mm._pil_png_raster = real
-        assert with_pil == scratch
-
-
 def test_png_decompression_bomb_fails_closed():
     """A decompression-bomb IDAT (valid IHDR, tiny declared dims, huge
     inflation ratio) must raise DecoderUnavailable via the bounded

@@ -90,3 +90,17 @@ def test_bench_headliners_exist_in_registry():
     missing = [n for n in bench.HEADLINERS if n not in QUERIES]
     assert not missing, f"bench headliners not in registry: {missing}"
     assert len(set(bench.HEADLINERS)) == len(bench.HEADLINERS)
+
+
+def test_engine_has_no_optional_import_forks():
+    """Every engine module imports its dependencies unconditionally: an
+    ``except ImportError`` fallback is a code path that only a host with
+    a different set of libraries runs, so the tests never see it."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "extract_text_spark"
+    hits = [f"{path.relative_to(pkg.parent)}:{n}"
+            for path in sorted(pkg.rglob("*.py"))
+            for n, line in enumerate(path.read_text().splitlines(), 1)
+            if "except ImportError" in line]
+    assert hits == []

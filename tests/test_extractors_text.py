@@ -95,6 +95,14 @@ def test_yaml_string_leaves():
     assert extract_yaml(y) == (
         "title: hello world\nmeta.author: bob\ntags[0]: x\ntags[1]: y"
     )
+    # full YAML 1.1 semantics of yaml.safe_load: flow sequences, block
+    # scalars, and the 'on'/'yes' booleans (a bool key joins the path as
+    # True; bool values are dropped like other non-string leaves)
+    assert extract_yaml("tags: [a, b]\n") == "tags[0]: a\ntags[1]: b"
+    assert extract_yaml("body: |\n  line one\n  line two\n") == (
+        "body: line one\nline two\n")
+    assert extract_yaml("on: yes\nname: n\n") == "name: n"
+    assert extract_yaml("on:\n  push: main\n") == "True.push: main"
 
 
 # -- E6 CSV round trip (app/extractors.py:494-505) ---------------------------

@@ -6,7 +6,6 @@ OOXML XML, mirroring the reference's own archive test
 (/root/reference/tests/test_extractors.py:334-347: literal zip bytes ->
 member fan-out with text equality)."""
 
-import io
 import json
 
 import pytest
@@ -555,53 +554,15 @@ def test_pdf_stream_slicing_respects_declared_length():
     assert _stream_data(body) == payload
 
 
-class _FakeRarInfo:
-    def __init__(self, name, data):
-        self.filename, self._data, self.file_size = name, data, len(data)
-
-    def is_dir(self):
-        return self.filename.endswith("/")
-
-
-class _FakeRarFile:
-    """rarfile.RarFile API subset the walker touches (infolist/read/ctx)."""
-    def __init__(self, fileobj):
-        if fileobj.read(4) != b"Rar!":
-            raise _FakeRarError("not a rar")
-        self._entries = [
-            _FakeRarInfo("a.txt", b"rar member text"),
-            _FakeRarInfo("dir/", b""),
-            _FakeRarInfo("dir/b.md", b"# T\n\nbody"),
-        ]
-
-    def infolist(self):
-        return self._entries
-
-    def read(self, info):
-        return info._data
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *a):
-        return False
-
-
-class _FakeRarError(Exception):
-    pass
-
-
-def test_rar_member_walk(monkeypatch):
-    """Drives the _rar_members body (infolist walk, dir skip, lazy read)
-    through an API-faithful stand-in — the real ``rarfile`` is absent in
-    this sandbox (reference treats it as an optional dep too,
-    app/extractors.py:1813-1820), and rarfile cannot CREATE archives even
-    where installed, so a stub is the only deterministic fixture."""
-    import types
-    import extract_text_spark.ingest as ing
-    fake = types.SimpleNamespace(RarFile=_FakeRarFile, Error=_FakeRarError)
-    monkeypatch.setattr(ing, "rarfile", fake)
-    status, spans = spans_from_bytes(b"Rar!\x1a\x07\x00fakebody", "x.rar")
+def test_rar_member_walk():
+    """Drives the _rar_members walk (member model, dir skip) on a real
+    stored-method RAR5 container through the ingest kernel, plus the
+    reference's per-file error for invalid bytes
+    (app/extractors.py:1812-1885)."""
+    from extract_text_spark.bytecorpus import make_rar5
+    rar = make_rar5({"a.txt": b"rar member text", "dir/b.md": b"# T\n\nbody"},
+                    with_dir="dir")
+    status, spans = spans_from_bytes(rar, "x.rar")
     assert status is None
     members = {json.loads(s["text"])["path"]: json.loads(s["text"])
                for s in spans}
@@ -612,45 +573,13 @@ def test_rar_member_walk(monkeypatch):
     assert status == "error: Error processing archive: Invalid RAR file"
 
 
-class _Fake7zEntry:
-    def __init__(self, name, size, is_directory):
-        self.filename, self.uncompressed = name, size
-        self.is_directory = is_directory
-
-
-class _Fake7zFile:
-    def __init__(self, fileobj):
-        if fileobj.read(2) != b"7z":
-            raise _FakeBad7zFile("not 7z")
-        self._blobs = {"one.txt": b"seven zip text",
-                       "sub/two.json": b'{"k": "v"}'}
-
-    def list(self):
-        return ([_Fake7zEntry(n, len(b), False)
-                 for n, b in self._blobs.items()]
-                + [_Fake7zEntry("sub", 0, True)])
-
-    def readall(self):
-        return {n: io.BytesIO(b) for n, b in self._blobs.items()}
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *a):
-        return False
-
-
-class _FakeBad7zFile(Exception):
-    pass
-
-
-def test_7z_member_walk(monkeypatch):
-    import types
-    import extract_text_spark.ingest as ing
-    fake = types.SimpleNamespace(SevenZipFile=_Fake7zFile,
-                                 Bad7zFile=_FakeBad7zFile)
-    monkeypatch.setattr(ing, "py7zr", fake)
-    status, spans = spans_from_bytes(b"7z\xbc\xaf\x27\x1cfake", "x.7z")
+def test_7z_member_walk():
+    """Drives the _7z_members walk on a real LZMA2 7z container through
+    the ingest kernel (app/extractors.py:1887-1959)."""
+    from extract_text_spark.bytecorpus import make_7z
+    z = make_7z({"one.txt": b"seven zip text", "sub/two.json": b'{"k": "v"}'},
+                coder="lzma2")
+    status, spans = spans_from_bytes(z, "x.7z")
     assert status is None
     members = {json.loads(s["text"])["path"]: json.loads(s["text"])
                for s in spans}
@@ -660,31 +589,15 @@ def test_7z_member_walk(monkeypatch):
     assert status == "error: Error processing archive: Invalid 7Z file"
 
 
-def test_7z_real_library_round_trip():
-    """Runs only where py7zr is installed (absent in this sandbox): write a
-    real .7z, walk it through the ingest kernel."""
-    py7zr = pytest.importorskip("py7zr")
-    buf = io.BytesIO()
-    with py7zr.SevenZipFile(buf, "w") as z:
-        z.writestr(b"real seven zip", "real.txt")
-    status, spans = spans_from_bytes(buf.getvalue(), "r.7z")
-    assert status is None
-    assert json.loads(spans[0]["text"])["text"] == "real seven zip"
-
-
 def test_rar_7z_vendored_fallback_error_surface():
-    """With the optional libs absent the vendored readers carry the walk;
-    out-of-subset containers fail closed with a clear per-file error (the
-    reference with libs installed would succeed — the subset bounds are
+    """Out-of-subset containers fail closed with a clear per-file error
+    (the reference's libraries would decode them; the subset bounds are
     documented in extractors/arclite.py)."""
-    import extract_text_spark.ingest as ing
-    if ing.rarfile is None:
-        status, _ = spans_from_bytes(b"Rar!\x1a\x07\x00x", "m.rar")
-        assert status == ("error: Error processing archive: RAR4 archives "
-                          "not supported by the vendored reader")
-    if ing.py7zr is None:
-        status, _ = spans_from_bytes(b"7z\xbc\xaf\x27\x1cx", "m.7z")
-        assert status == "error: Error processing archive: Invalid 7Z file"
+    status, _ = spans_from_bytes(b"Rar!\x1a\x07\x00x", "m.rar")
+    assert status == ("error: Error processing archive: RAR4 archives "
+                      "not supported by the vendored reader")
+    status, _ = spans_from_bytes(b"7z\xbc\xaf\x27\x1cx", "m.7z")
+    assert status == "error: Error processing archive: Invalid 7Z file"
 
 
 def test_truncated_archive_is_per_file_error_not_crash():
@@ -821,9 +734,8 @@ def test_vendored_7z_multi_coder_filter_chains():
 
 
 def test_vendored_readers_drive_ingest_fanout():
-    """With rarfile/py7zr absent (this sandbox), the vendored readers
-    carry the A4/A5 walk: member model, nested recursion, error surface
-    (app/extractors.py:1812-1959)."""
+    """The vendored readers carry the A4/A5 walk: member model, nested
+    recursion, error surface (app/extractors.py:1812-1959)."""
     import json
     from extract_text_spark.bytecorpus import make_7z, make_rar5
     r = make_rar5({"a.txt": b"rar text"})
