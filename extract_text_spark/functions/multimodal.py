@@ -4,10 +4,12 @@ The reference OCRs images via a Tesseract subprocess (app/extractors.py:
 1386-1519) and fences it with size/mode validation (app/utils.py:639-682).
 In the Spark engine, media are ``binary`` columns with typed metadata; the
 *plumbing* — schema, Arrow batch shape, partitioning, validation gates —
-is real and tested, while codec work (decode/resize/frame-sample) is
-stubbed behind ``DecoderUnavailable`` because no image/audio libs ship in
-this environment. Swap ``_decode_stub`` for a PIL/ffmpeg call and the
-pipeline is unchanged.
+is real and tested. PNG, GIF, TIFF and BMP rasters decode and resize
+through the numpy/stdlib decoders below, and the feature kernel parses
+BMP, PNG, GIF, WAV, FLAC, MP3, MP4 and WebM headers for dimensions,
+rates and durations. Other inputs (JPEG, WebP, compressed codecs) get a
+``stubbed``/``planned``/``unsupported`` status instead of pixels; the
+decoders raise ``DecoderUnavailable`` for inputs they cannot handle.
 """
 
 from __future__ import annotations
@@ -70,13 +72,7 @@ _MAGIC = [
 
 
 class DecoderUnavailable(NotImplementedError):
-    """Raised by codec stubs; replace with a real decoder in production."""
-
-
-def _decode_stub(payload: bytes, mime: str):  # pragma: no cover - stub
-    raise DecoderUnavailable(
-        f"no codec for {mime} in this environment; plug PIL/ffmpeg here"
-    )
+    """Raised by the decoders for input outside their envelope."""
 
 
 def sniff_mime(payload: bytes | None) -> str | None:
@@ -608,13 +604,12 @@ def _feature_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
 
     for batch in batches:
         rows = []
-        for ref, payload, mime in zip(batch["media_ref"], batch["payload"],
-                                      batch["mime"]):
+        for ref, payload in zip(batch["media_ref"], batch["payload"]):
             payload = bytes(payload) if payload is not None else b""
             sniffed = sniff_mime(payload)
             width = height = rate = duration = None
             # Header formats with stdlib-decodable metadata are decoded for
-            # real; compressed codecs stay behind the stub seam.
+            # real; every other format is reported "stubbed".
             hdr = (decode_bmp_header(payload) if sniffed == "image/bmp"
                    else decode_png_header(payload)
                    if sniffed == "image/png"
@@ -630,16 +625,10 @@ def _feature_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
                    if sniffed == "video/mp4"
                    else decode_webm_header(payload)
                    if sniffed == "video/webm" else None)
+            status = "decoded" if hdr is not None else "stubbed"
             if hdr is not None:
-                status = "decoded"
                 width, height = hdr.get("width"), hdr.get("height")
                 rate, duration = hdr.get("sample_rate"), hdr.get("duration_ms")
-            else:
-                try:
-                    _decode_stub(payload, mime)
-                    status = "decoded"
-                except DecoderUnavailable:
-                    status = "stubbed"
             # Deterministic "feature": content hash stands in for the real
             # embedding/thumbnail so downstream plumbing is exercised.
             rows.append((ref, status, len(payload), sniffed,
@@ -659,7 +648,7 @@ def extract_media_features(df: DataFrame,
     if partitions:
         valid = valid.repartition(partitions, F.pmod(F.xxhash64("media_ref"),
                                                      F.lit(partitions)))
-    return valid.select("media_ref", "payload", "mime").mapInPandas(
+    return valid.select("media_ref", "payload").mapInPandas(
         _feature_batches, schema=FEATURE_SCHEMA
     )
 

@@ -732,52 +732,23 @@ def ingest_bytes_df(df: DataFrame, validate: bool = False) -> DataFrame:
 
 
 def extract_from_bytes(df: DataFrame, validate: bool = False,
-                       cache_registry: list | None = None,
                        **extract_kwargs) -> DataFrame:
     """Full byte-ingest pipeline: parse containers -> JVM fan-out ->
     extraction kernel (pipeline.extract_spans_df).
 
-    The ingest output is persisted (MEMORY_AND_DISK). The one-pass
-    extraction plan reads it once, so the cache pays off only when the
-    ingest output is read again: a second action on the result would
-    otherwise PARSE every container again.
-
-    Releasing the cache: looping drivers pass ``cache_registry=`` (any
-    list they own) — the persisted handle is appended to it, and
-    ``release_caches(registry)`` frees every job's raw-byte cache after
-    the consuming action. The handle also rides on the RETURNED
-    DataFrame as ``result.ingest_cache`` for one-shot callers, but note
-    that is a plain Python attribute: any transformation
-    (``result.select(...)``) returns a new object without it, which is
-    exactly why loops should own the registry instead."""
+    Nothing is persisted: one action runs the ingest kernel and the
+    extraction kernel once per row. A second action on the result parses
+    every container again."""
     from .pipeline import extract_spans_df
-    from pyspark import StorageLevel
-    ing = ingest_bytes_df(df, validate=validate).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    if cache_registry is not None:
-        cache_registry.append(ing)
-    out = extract_spans_df(ing, **extract_kwargs)
-    out.ingest_cache = ing
-    return out
-
-
-def release_ingest_cache(result: DataFrame) -> None:
-    """Unpersist the cached ingest output riding on an
-    ``extract_from_bytes`` / ``extract_from_urls`` result (no-op for
-    results without one — including any TRANSFORMED result, which loses
-    the attribute; loops should use ``cache_registry=`` +
-    ``release_caches``). Call after the consuming action; the result
-    stays valid — a re-run just re-parses."""
-    ing = getattr(result, "ingest_cache", None)
-    if ing is not None:
-        ing.unpersist()
+    return extract_spans_df(ingest_bytes_df(df, validate=validate),
+                            **extract_kwargs)
 
 
 def release_caches(registry: list) -> None:
-    """Unpersist every handle collected via ``cache_registry=`` and
-    clear the list — the loop-safe release: transformations on a result
-    discard its ``.ingest_cache`` attribute, but the registry the CALLER
-    owns survives any downstream plan shaping."""
+    """Unpersist every handle collected via ``cache_registry=``
+    (``urlsource.extract_from_urls``, ``sampling.dsir_sample``) and
+    clear the list. The registry belongs to the caller, so it survives
+    any transformation of the result."""
     for ing in registry:
         ing.unpersist()
     registry.clear()

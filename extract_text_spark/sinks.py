@@ -54,6 +54,10 @@ def write_table(
         return "iceberg"
 
     w = df.write.mode("overwrite" if mode == "overwrite_partitions" else mode)
+    if mode == "overwrite_partitions":
+        # pinned on this write, as in checkpoint.py: Spark's default
+        # static mode would delete every partition this write lacks
+        w = w.option("partitionOverwriteMode", "dynamic")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(name_or_path)

@@ -436,14 +436,12 @@ def extract_from_urls(df: DataFrame, fetch,
     """Full URL pipeline: validate+fetch+route -> JVM fan-out ->
     extraction kernel, mirroring ingest.extract_from_bytes.
 
-    The ingest output is persisted (MEMORY_AND_DISK). The one-pass
-    extraction plan reads it once; the cache keeps a second action on
-    the result from FETCHING each URL again — wrong for a
-    side-effecting network tier. The cache is not released here (the
-    result is lazy): looping callers pass ``cache_registry=`` and free
-    each job via ``ingest.release_caches(registry)``; the handle also
-    rides on the untouched result as ``result.ingest_cache`` for
-    one-shot callers (a plain attribute — lost on any transformation)."""
+    The ingest output is persisted (MEMORY_AND_DISK), the only ingest
+    persist in the engine: a fetch has side effects, so a second action
+    on the result must read the cache instead of FETCHING each URL
+    again. The cache is not released here (the result is lazy):
+    callers pass ``cache_registry=`` and free it after their last
+    action via ``ingest.release_caches(registry)``."""
     from pyspark import StorageLevel
     from .pipeline import extract_spans_df
     ingest_kwargs = {k: kwargs.pop(k) for k in
@@ -453,6 +451,4 @@ def extract_from_urls(df: DataFrame, fetch,
         StorageLevel.MEMORY_AND_DISK)
     if cache_registry is not None:
         cache_registry.append(ing)
-    out = extract_spans_df(ing, **kwargs)
-    out.ingest_cache = ing
-    return out
+    return extract_spans_df(ing, **kwargs)

@@ -196,26 +196,15 @@ def ingest_warc_df(df: DataFrame, id_col: str = "doc_id",
     return src.mapInPandas(kernel, schema=_URL_SCHEMA)
 
 
-def extract_from_warc(df: DataFrame, cache_registry: list | None = None,
-                      **kwargs) -> DataFrame:
+def extract_from_warc(df: DataFrame, **kwargs) -> DataFrame:
     """Full WARC pipeline: record split + routing -> JVM fan-out ->
-    extraction kernel, mirroring ingest.extract_from_bytes. The ingest
-    output is persisted; the one-pass extraction plan reads it once, and
-    the cache keeps a second action on the result from decompressing
-    and re-splitting each WARC again; looping
-    drivers release via ``cache_registry=`` + ingest.release_caches, and
-    the handle rides on the result as ``result.ingest_cache``."""
-    from pyspark import StorageLevel
+    extraction kernel, mirroring ingest.extract_from_bytes. Nothing is
+    persisted: one action runs each kernel once per row, and a second
+    action decompresses and re-splits each WARC again."""
     from .pipeline import extract_spans_df
     ingest_kwargs = {k: kwargs.pop(k) for k in ("id_col", "payload_col")
                      if k in kwargs}
-    ing = ingest_warc_df(df, **ingest_kwargs).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    if cache_registry is not None:
-        cache_registry.append(ing)
-    out = extract_spans_df(ing, **kwargs)
-    out.ingest_cache = ing
-    return out
+    return extract_spans_df(ingest_warc_df(df, **ingest_kwargs), **kwargs)
 
 
 # ---------------------------------------------------------------------------

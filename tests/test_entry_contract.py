@@ -48,6 +48,10 @@ def test_file_size_cap(kind):
 
 
 def test_sink_fallback_roundtrip(spark, tmp_path):
+    """The parquet fallback pins dynamic overwrite on the write itself:
+    under a session forced to Spark's static default, overwriting k=2
+    keeps the k=1 rows (as test_rerun_overwrites_not_duplicates does
+    for checkpoint.py)."""
     from extract_text_spark.sinks import iceberg_available, read_table, write_table
 
     assert not iceberg_available(spark)  # no Iceberg jar in this sandbox
@@ -57,6 +61,16 @@ def test_sink_fallback_roundtrip(spark, tmp_path):
     assert backend == "parquet"
     back = read_table(spark, str(tmp_path / "t"))
     assert sorted((r["k"], r["v"]) for r in back.collect()) == [(1, "a"), (2, "b")]
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    try:
+        write_table(spark.createDataFrame([(2, "c")], ["k", "v"]),
+                    str(tmp_path / "t"), mode="overwrite_partitions",
+                    partition_by=["k"])
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    back = read_table(spark, str(tmp_path / "t"))
+    assert sorted((r["k"], r["v"]) for r in back.collect()) == [(1, "a"), (2, "c")]
 
 
 def test_gate_corpus_text_never_sniffs_as_media():
@@ -104,3 +118,29 @@ def test_engine_has_no_optional_import_forks():
             for n, line in enumerate(path.read_text().splitlines(), 1)
             if "except ImportError" in line]
     assert hits == []
+
+
+def test_no_registry_sort_shares_a_stage_with_python(spark):
+    """A global sort samples its child stage for the range bounds, then
+    runs it again for the data: a Python kernel in that stage runs twice
+    per row. No registry plan may put one there (the ext_*, mm_* and
+    extraction builders return unsorted results for this reason)."""
+    from tools.dump_plans import python_under_global_sort
+
+    hits = {}
+    for name, fn in entrymod.queries().items():
+        found = python_under_global_sort(fn(spark, "/root/testdata/sf0.001"))
+        if found:
+            hits[name] = found
+    assert not hits, hits
+
+
+@pytest.mark.parametrize("name", ["ext_zip_fanout", "ext_warc_source"])
+def test_byte_and_warc_queries_leave_nothing_persisted(spark, name):
+    """extract_from_bytes/extract_from_warc persist nothing, so running
+    their registry queries leaves no cached RDD behind (of the ingest
+    wrappers, only extract_from_urls persists)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    entrymod.queries()[name](spark, "/root/testdata/sf0.001").collect()
+    assert rdds().size() == before

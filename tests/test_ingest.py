@@ -451,20 +451,6 @@ def test_extract_from_bytes_end_to_end(spark):
     assert "d1/__MACOSX/._x" not in out
 
 
-def test_extract_from_bytes_cache_handle_release(spark):
-    """The persisted ingest output rides on the result as .ingest_cache;
-    release_ingest_cache unpersists just that job's cache (looping
-    drivers must not need spark.catalog.clearCache())."""
-    from extract_text_spark.ingest import release_ingest_cache
-    rows = [("d1", "plain.txt", b"some text")]
-    out = extract_from_bytes(_bytes_df(spark, rows))
-    assert out.ingest_cache.storageLevel.useMemory
-    out.count()
-    release_ingest_cache(out)
-    assert not out.ingest_cache.storageLevel.useMemory
-    release_ingest_cache(out.limit(1))  # no handle -> no-op, no raise
-
-
 def test_ingest_validate_quarantines(spark):
     rows = [
         ("ok", "a.txt", b"fine text"),
@@ -782,18 +768,25 @@ def test_vendored_7z_declared_size_cap_fires_before_decode():
 
 
 def test_cache_registry_survives_transformations(spark):
-    """The loop-safe release path: .ingest_cache is a plain attribute and
-    any transformation discards it, but a caller-owned cache_registry
-    keeps the handle, so release_caches frees the persisted ingest even
-    when the driver only ever held a derived DataFrame."""
+    """extract_from_urls appends its persisted ingest to a caller-owned
+    cache_registry, so release_caches frees the persist even when the
+    driver only ever held a derived DataFrame."""
     from extract_text_spark.ingest import release_caches
-    rows = [("d1", "plain.txt", b"some text")]
+    from extract_text_spark.urlsource import extract_from_urls
+
+    def fetch(url, ua):
+        return {"content_type": "text/plain", "final_url": url,
+                "headers": {"content-type": "text/plain"},
+                "content": b"some text"}
+
+    urls = spark.createDataFrame([("http://site.example/a.txt",)],
+                                 "url string")
     reg: list = []
-    derived = extract_from_bytes(_bytes_df(spark, rows),
-                                 cache_registry=reg).select("doc_id")
-    assert not hasattr(derived, "ingest_cache")   # attribute gone
+    derived = extract_from_urls(urls, fetch, cache_registry=reg,
+                                resolver=lambda h: ["93.184.216.34"]
+                                ).select("doc_id")
     assert len(reg) == 1 and reg[0].storageLevel.useMemory
-    derived.count()
+    assert derived.count() == 1
     handle = reg[0]
     release_caches(reg)
     assert not handle.storageLevel.useMemory and reg == []

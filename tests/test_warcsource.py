@@ -107,7 +107,6 @@ def test_extract_from_warc_end_to_end(spark):
     assert got["w0/1"]["spans"][0]["text"] == "Body one"
     assert got["w1/0"]["spans"][0]["text"] == "doc two text"
     assert got["w2"]["status"].startswith("error: Error processing WARC")
-    out.ingest_cache.unpersist()
 
 
 def test_wet_writer_roundtrip_and_packaging():

@@ -19,6 +19,46 @@ def n_nodes(ftext: str, op: str) -> int:
     return len(set(re.findall(re.escape(op) + r"\s*\((\d+)\)", ftext)))
 
 
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _name(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def python_under_global_sort(df) -> list[str]:
+    """Class names of the Python nodes that share a stage with a global
+    sort. Spark samples the sort's child stage for the range bounds and
+    then runs it again for the data, so a kernel there runs twice per
+    row. The walk starts from the adaptive plan's initial physical plan
+    (the one with exchanges inserted) and follows each global SortExec
+    through its range Exchange down to the next stage boundary."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if _name(plan) == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    hits, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        kids = _children(node)
+        todo.extend(kids)
+        if _name(node) != "SortExec" or not getattr(node, "global")():
+            continue
+        stage = [c for k in kids if "Exchange" in _name(k)
+                 for c in _children(k)]
+        while stage:
+            n = stage.pop()
+            name = _name(n)
+            if any(b in name for b in ("Exchange", "QueryStage",
+                                       "InMemoryTableScan")):
+                continue
+            if any(m in name for m in ("Python", "InPandas", "InArrow")):
+                hits.append(name)
+            stage.extend(_children(n))
+    return hits
+
+
 def plan_of(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -416,14 +456,14 @@ def main():
     ])
 
     ag = QUERIES["ext_archive_guards"](spark, SF)
-    add("ext_archive_guards — guards inside the once-run, cached ingest "
-        "kernel; JVM fan-out", ag, [
-        ("3 MapInPandas nodes: fixture generator + ingest (cached) + "
-         "one extraction kernel",
+    add("ext_archive_guards — guards inside the once-run ingest kernel; "
+        "JVM fan-out", ag, [
+        ("3 MapInPandas nodes: fixture generator + ingest + one "
+         "extraction kernel",
          lambda t: n_nodes(t, "MapInPandas") == 3),
-        ("the extraction reads the cached ingest once (one "
-         "InMemoryTableScan)",
-         lambda t: n_nodes(t, "InMemoryTableScan") == 1),
+        ("nothing persisted (no InMemoryTableScan): with no output sort "
+         "one action runs each kernel once",
+         lambda t: n_nodes(t, "InMemoryTableScan") == 0),
         ("exactly one parquet scan node of documents feeds everything",
          lambda t: n_nodes(t, "Scan parquet") == 1),
         ("nested-member fan-out is JVM-only (Generate explode, no "
@@ -459,26 +499,23 @@ def main():
     ])
 
     wq = QUERIES["ext_warc_source"](spark, SF)
-    add("ext_warc_source — WARC split + routing in the cached ingest "
-        "kernel; shared extraction tail", wq, [
-        ("3 MapInPandas nodes: fixture generator + WARC ingest (cached) + "
-         "one extraction kernel",
+    add("ext_warc_source — WARC split + routing in the ingest kernel; "
+        "shared extraction tail", wq, [
+        ("3 MapInPandas nodes: fixture generator + WARC ingest + one "
+         "extraction kernel",
          lambda t: n_nodes(t, "MapInPandas") == 3),
-        ("the extraction reads the cached ingest once (one "
-         "InMemoryTableScan)",
-         lambda t: n_nodes(t, "InMemoryTableScan") == 1),
+        ("nothing persisted (no InMemoryTableScan)",
+         lambda t: n_nodes(t, "InMemoryTableScan") == 0),
         ("record fan-out happens inside the kernel — no Python between "
          "kernels", lambda t: "BatchEvalPython" not in t),
     ])
 
     bp = QUERIES["ta_bpe"](spark, SF)
-    add("ta_bpe — one Arrow kernel, no shuffle before it", bp, [
+    add("ta_bpe — one Arrow kernel, no shuffle", bp, [
         ("exactly one MapInPandas (the merge loop)",
          lambda t: n_nodes(t, "MapInPandas") == 1),
-        ("no Exchange before the kernel (partition-preserving encode; "
-         "the only exchange is the output orderBy's range partition)",
-         lambda t: len(set(re.findall(r"Exchange(?:\w*)? \((\d+)\)",
-                                      t))) == 1),
+        ("no Exchange (partition-preserving encode)",
+         lambda t: "Exchange" not in t),
     ])
 
     from extract_text_spark.functions import text_stats as _ts
@@ -544,10 +581,8 @@ def main():
          "verifier), no row-at-a-time Python",
          lambda t: n_nodes(t, "MapInPandas") == 2
          and "BatchEvalPython" not in t),
-        ("the only exchange is the output sort's range partition "
-         "(records never shuffle between write and verify)",
-         lambda t: len(set(re.findall(r"Exchange(?:\w*)? \((\d+)\)",
-                                      t))) == 1),
+        ("no Exchange (records never shuffle between write and verify)",
+         lambda t: "Exchange" not in t),
     ])
 
     cb = QUERIES["ta_ccnet_buckets"](spark, SF)
@@ -586,6 +621,17 @@ def main():
         ("single scan of the documents table",
          lambda t: n_nodes(t, "Scan parquet") == 1),
     ])
+
+    hits = {name: found for name, fn in QUERIES.items()
+            if (found := python_under_global_sort(fn(spark, SF)))}
+    sections.append(
+        "## registry — no global sort shares a stage with a Python kernel\n\n"
+        f"- [{' ' if hits else 'x'}] none of the {len(QUERIES)} registry "
+        "plans has a Python node between a global sort's range Exchange "
+        "and the next stage boundary (python_under_global_sort), so no "
+        "bounds sample re-runs a kernel\n"
+        + "".join(f"  - {n}: {', '.join(h)}\n"
+                  for n, h in sorted(hits.items())))
 
     header = (
         "# PLANS — physical-plan evidence (generated by tools/dump_plans.py)\n\n"
