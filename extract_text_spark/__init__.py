@@ -20,7 +20,8 @@ Design (see SURVEY.md for the full blueprint):
   ``mapInPandas`` (iterator form) — never per-row Python UDFs.
 * **Scale levers**: salted repartition by doc_id (several partitions per
   core, so idle cores take the tasks left while an oversized document
-  runs), byte-aware Arrow batching, bucket-level checkpoint manifests with
+  runs; the salt values are hashed again, so some partitions stay
+  empty), byte-aware Arrow batching, bucket-level checkpoint manifests with
   left-anti-join resume. Every extraction (batch, streaming,
   checkpointed) is one plan: scan -> fan-out -> salt -> one kernel.
 * **Byte ingress** (round 2): ``ingest.extract_from_bytes`` parses REAL
@@ -31,9 +32,10 @@ Design (see SURVEY.md for the full blueprint):
 
 Entry points: ``ingest.extract_from_bytes`` (raw files),
 ``pipeline.extract_spans_df`` (span tables), ``checkpoint.run_extraction``
-(resumable batch), ``streaming.stream`` (continuous), ``functions.*``
-(dedup / similarity / text_stats / multimodal), ``queries`` (the oracled
-query registry backing ``__spark_entry__``).
+(resumable batch over span tables or raw files), ``streaming.stream``
+(continuous), ``functions.*`` (dedup / similarity / text_stats /
+multimodal), ``queries`` (the oracled query registry backing
+``__spark_entry__``).
 """
 
 __version__ = "0.2.0"

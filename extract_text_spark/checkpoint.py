@@ -17,7 +17,16 @@ Mechanism (SURVEY.md §4.3):
   run_ts)`` is appended to ``{output}/_manifest`` — lineage + extraction
   metrics;
 * resume = left-anti join of the input's buckets against completed manifest
-  buckets: already-done buckets are never re-read past the scan.
+  buckets, applied before any Python kernel: already-done buckets are
+  never parsed or extracted.
+
+Input is either a span table ``(doc_id, spans)`` or a raw-file table
+``(doc_id, filename, content)`` (``ingest.named_binary_df``), told apart by
+its ``content`` column. Buckets, the bucket filter, the resume anti-join and
+the emptiness probe read ``doc_id`` only, so over a ``binaryFile`` scan an
+all-done resume reads no file contents, and byte ingestion
+(``ingest.ingest_bytes_df``) runs inside the data write, once per pending
+file.
 
 Crash-safety: the manifest append happens only after the data write
 returns, so a failure mid-write leaves at worst a torn partition that the
@@ -36,6 +45,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import DEFAULT_NUM_BUCKETS
+from .ingest import ingest_bytes_df
 from .pipeline import extract_spans_df
 
 
@@ -64,6 +74,10 @@ def run_extraction(
 ) -> dict:
     """Extract ``docs`` into ``{output_dir}/data`` with manifest checkpoints.
 
+    ``docs`` is a span table ``(doc_id, spans)`` or a raw-file table
+    ``(doc_id, filename, content)``; either way done buckets are never
+    parsed, and each pending document is ingested and extracted once.
+
     ``bucket_filter`` (testing/fault-injection): optional predicate column
     over ``bucket`` restricting which buckets this invocation processes —
     simulates a killed run that only finished part of the input.
@@ -83,25 +97,21 @@ def run_extraction(
     # buckets a collected python list would bloat the manifest plan with a
     # 10^5-literal IN — the manifest scopes itself with a broadcast
     # semi-join instead. The only driver action is the emptiness probe
-    # (limit 1): on parquet inputs it is a column-pruned scan, but when
-    # ``docs`` arrives through the byte-ingestion kernel (submit
-    # --input-format binary) the probe does execute that kernel for the
-    # first non-empty partition — one extra kernel invocation, bounded
-    # by the limit, not a full pass.
+    # (limit 1), a column-pruned read of doc_id.
     inc_buckets = docs.select("bucket").distinct()
     if docs.select("bucket").isEmpty():
         return {"buckets": 0, "docs": 0, "spans": 0, "bytes_in": 0,
                 "wall_ms": int((time.monotonic() - t0) * 1000)}
+    docs = (ingest_bytes_df(docs) if "content" in docs.columns
+            else docs.select("doc_id", "spans"))
 
     # NB: fan-out children land in the *parent's* bucket so bucket-level
     # resume stays exact (children re-derive deterministically from parents).
     # The pipeline carries the pre-fan-out root_id through the kernel —
     # string-splitting the child doc_id would mis-bucket inputs whose own
     # doc_id contains '/'.
-    result = extract_spans_df(
-        docs.select("doc_id", "spans"), salt_partitions=salt_partitions,
-        keep_root=True,
-    )
+    result = extract_spans_df(docs, salt_partitions=salt_partitions,
+                              keep_root=True)
     result = result.withColumn(
         "bucket", F.pmod(F.xxhash64("root_id"), F.lit(num_buckets)).cast("int")
     ).drop("root_id")

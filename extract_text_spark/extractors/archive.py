@@ -2,9 +2,8 @@
 
 In the Spark pipeline the fan-out itself is JVM-side Catalyst work
 (``from_json`` + ``explode`` + filters — see pipeline.py); these pure
-functions carry the *semantics* (path sanitation, system-file filter, size
-guards) and serve the single-process oracle and the SQL-expression
-generators.
+functions carry the *semantics* (path sanitation, system-file filter) and
+serve the single-process oracle and the SQL-expression generators.
 
 Archive member payload convention (one ``archive_member`` span per member):
     {"path": str, "kind": str, "text": str|null, "media_ref": str|null,
@@ -13,7 +12,7 @@ Archive member payload convention (one ``archive_member`` span per member):
 
 from __future__ import annotations
 
-from ..config import MAX_ARCHIVE_NESTING, MAX_EXTRACTED_SIZE
+from ..config import MAX_ARCHIVE_NESTING
 
 # app/extractors.py:2016-2035 — substring blacklist, case-insensitive.
 SYSTEM_FILE_MARKERS = [
@@ -40,12 +39,6 @@ def is_system_file(filename: str) -> bool:
     """app/extractors.py:2016-2035."""
     lowered = filename.lower()
     return any(marker in lowered for marker in SYSTEM_FILE_MARKERS)
-
-
-def within_extraction_budget(member_sizes: list[int]) -> bool:
-    """Zip-bomb guard: total uncompressed size <= 100 MB
-    (app/extractors.py:1668-1677)."""
-    return sum(member_sizes) <= MAX_EXTRACTED_SIZE
 
 
 def child_doc_id(parent_doc_id: str, member_path: str) -> str:

@@ -15,8 +15,6 @@ EN_STOPWORDS = [
     "for", "on", "with", "as", "by", "at", "from", "it", "this", "that",
 ]
 
-_PUNCT = ".,;:!?"
-
 
 def token_count_col(text: str | Column = "text") -> Column:
     return F.size(F.split(text, " "))
@@ -30,11 +28,6 @@ def stopword_ratio_col(text: str | Column = "text") -> Column:
     toks = F.split(text, " ")
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*EN_STOPWORDS)))
     return n_stop.cast("double") / F.size(toks)
-
-
-def punct_ratio_col(text: str | Column = "text") -> Column:
-    stripped = F.translate(text, _PUNCT, "")
-    return (F.length(text) - F.length(stripped)).cast("double") / F.length(text)
 
 
 def quality_score_col(text: str | Column = "text",

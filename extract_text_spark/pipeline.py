@@ -6,10 +6,12 @@ Stages (all declarative except the extraction kernel itself):
    (``from_json`` + ``explode`` + regexp path sanitation + guard filters),
    reproducing A1-A8 of SURVEY.md §2.3 JVM-side with no Python. The
    fan-out expression is built once per JVM and reused by every plan.
-2. **Salted repartition** — ``repartition(pmod(xxhash64(doc_id), P))``
-   spreads hot doc_ids; with P at several partitions per core, idle cores
-   take the remaining tasks while an oversized document runs, and with
-   AQE on, post-shuffle coalescing keeps small runs tight.
+2. **Salted repartition** — ``repartition(P, pmod(xxhash64(doc_id), P))``
+   spreads documents by doc_id. Spark hashes the P salt values again to
+   place them, so only some partitions get rows (10 of 16 at P=16); the
+   width is explicit, so AQE does not coalesce it and the kernel still
+   runs P tasks. With P at several partitions per core, idle cores take
+   the remaining tasks while an oversized document runs.
 3. **Extraction kernel** — Arrow-batched ``mapInPandas`` (iterator form)
    running ``extractors.extract_document`` per row; never per-row Python
    UDFs, no driver-side collects.

@@ -4,20 +4,30 @@ Simulates a killed run (only a subset of buckets processed), then resumes:
 the final output must equal a one-shot run — no duplicates, no gaps — and
 already-done buckets must not be reprocessed."""
 
+import json
+import os
+import subprocess
+import sys
+
 import pyspark.sql.functions as F
 
 from extract_text_spark.checkpoint import completed_buckets, run_extraction
 from extract_text_spark.corpus import corpus_to_df, gen_corpus
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def _result_map(spark, out_dir):
-    rows = spark.read.parquet(f"{out_dir}/data").collect()
+
+def _doc_map(df):
     return {
         r["doc_id"]: (r["status"],
                       [(s["kind"], s["text"], s["media_ref"], s["offset"])
                        for s in r["spans"]])
-        for r in rows
+        for r in df.collect()
     }
+
+
+def _result_map(spark, out_dir):
+    return _doc_map(spark.read.parquet(f"{out_dir}/data"))
 
 
 def test_partial_then_resume_equals_oneshot(spark, tmp_path):
@@ -109,3 +119,114 @@ def test_manifest_metrics(spark, tmp_path):
     assert row["s"] == stats["spans"]
     assert row["b"] == stats["bytes_in"] and row["b"] > 0
     assert {r["status"] for r in m.collect()} == {"done"}
+
+
+def _write_raw_files(root) -> int:
+    """A directory of real files: a zip holding a nested zip, a docx, a
+    pdf, plain texts and one corrupt docx. Returns the file count."""
+    from extract_text_spark.bytecorpus import make_docx, make_pdf, make_zip
+    files = {
+        "bundle.zip": make_zip({
+            "inner.md": b"# T\n\nzipped body",
+            "sub/nested.zip": make_zip({"deep.txt": b"deep text"}),
+        }),
+        "report.docx": make_docx(["Docx para"]),
+        "paper.pdf": make_pdf([["Page one"], ["Page two"]]),
+        "broken.docx": b"not a zip at all",
+    }
+    # enough plain files that both bucket parities hold some input
+    for i in range(12):
+        files[f"note{i:02d}.txt"] = f"plain note {i}".encode()
+    os.makedirs(root)
+    for name, data in files.items():
+        with open(os.path.join(root, name), "wb") as fh:
+            fh.write(data)
+    return len(files)
+
+
+def test_raw_files_parse_each_pending_file_once(spark, tmp_path):
+    """A raw-file table (doc_id = full path, containing '/') is bucketed and
+    resume-filtered before byte ingestion: a partial run plus its resume
+    equals a one-shot run and extract_from_bytes, an all-done resume reads
+    no file contents, and nothing is persisted."""
+    from pyspark.sql.functions import pandas_udf
+
+    from extract_text_spark.ingest import extract_from_bytes, named_binary_df
+
+    src = str(tmp_path / "files")
+    n_files = _write_raw_files(src)
+    reads = spark.sparkContext.accumulator(0)
+
+    def counting_reads():
+        @pandas_udf("binary")
+        def touch(content):
+            reads.add(len(content))
+            return content
+        return touch
+
+    touch = counting_reads()
+    files = named_binary_df(spark.read.format("binaryFile").load(src))
+    docs = files.withColumn("content", touch("content"))
+    one, two = str(tmp_path / "one"), str(tmp_path / "two")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def run(out, **kw):
+        before = reads.value
+        m = run_extraction(spark, docs, out, num_buckets=8, **kw)
+        return m, reads.value - before
+
+    m0, r0 = run(one)
+    assert m0["buckets"] > 0 and r0 == n_files
+
+    n_even = (files.select(F.pmod(F.xxhash64("doc_id"), F.lit(8)).alias("b"))
+              .filter(F.col("b") % 2 == 0).count())
+    m1, r1 = run(two, bucket_filter=lambda b: b % 2 == 0)
+    assert r1 == n_even
+    m2, _ = run(two)
+    assert m1["buckets"] + m2["buckets"] == m0["buckets"]
+    assert m1["docs"] + m2["docs"] == m0["docs"]
+
+    oneshot = _result_map(spark, one)
+    assert len(oneshot) == m0["docs"]
+    assert _result_map(spark, two) == oneshot
+    assert _doc_map(extract_from_bytes(files)) == oneshot
+    status = {d.rsplit("/", 1)[-1]: st for d, (st, _) in oneshot.items()}
+    assert status["broken.docx"].startswith("error")
+    assert status["deep.txt"] == "ok"
+    assert all(src in d for d in oneshot)
+
+    m3, r3 = run(two)
+    assert m3["buckets"] == 0 and m3["docs"] == 0 and r3 == 0
+    assert _result_map(spark, two) == oneshot
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_submit_extract_binary_input_resumes(spark, tmp_path):
+    """tools/submit_extract.py --input-format binary, run twice as its own
+    process (main() stops its session): the first run extracts every file,
+    keeping the corrupt file's error status; the resubmit does no work."""
+    src, out = str(tmp_path / "files"), str(tmp_path / "out")
+    _write_raw_files(src)
+    env = dict(os.environ, SPARK_MASTER="local[2]", SPARK_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   p for p in [REPO, os.environ.get("PYTHONPATH")] if p))
+    cmd = [sys.executable, os.path.join(REPO, "tools", "submit_extract.py"),
+           "--input-format", "binary", "--input", src, "--output", out,
+           "--buckets", "4"]
+
+    def submit() -> dict:
+        proc = subprocess.run(cmd, env=env, cwd=REPO, capture_output=True,
+                              text=True, timeout=600)
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        return json.loads(proc.stdout.strip().splitlines()[-1])
+
+    first = submit()
+    data = spark.read.parquet(f"{out}/data")
+    assert first["docs"] == data.count() > 0
+    status = {r["doc_id"].rsplit("/", 1)[-1]: r["status"]
+              for r in data.collect()}
+    assert status["broken.docx"].startswith("error")
+    assert status["report.docx"] == "ok"
+
+    second = submit()
+    assert second["buckets"] == 0 and second["docs"] == 0

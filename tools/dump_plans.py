@@ -195,6 +195,27 @@ def main():
         ("MapInPandas present", r"MapInPandas"),
     ])
 
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from extract_text_spark.checkpoint import with_bucket
+    from extract_text_spark.ingest import named_binary_df
+    with tempfile.TemporaryDirectory(prefix="plans-raw-") as raw_dir:
+        for i in range(4):
+            with open(f"{raw_dir}/f{i}.txt", "wb") as fh:
+                fh.write(b"raw file %d" % i)
+        files = named_binary_df(spark.read.format("binaryFile").load(raw_dir))
+        probe = (with_bucket(files, 8).filter(F.col("bucket") % 2 == 0)
+                 .select("bucket"))
+        add("checkpointed raw files — buckets, bucket filter and emptiness "
+            "probe read paths only (checkpoint.run_extraction)", probe, [
+            ("binaryFile scan reads only the path (file contents unread)",
+             r"ReadSchema: struct<path:string>"),
+            ("no Python before ingestion",
+             lambda t: "MapInPandas" not in t and "EvalPython" not in t),
+        ])
+
     ka = QUERIES["sim_kmeans_assign"](spark, SF)
     add("sim_kmeans_assign — zero-shuffle literal-codebook training "
         "assignment", ka, [

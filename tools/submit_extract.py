@@ -17,7 +17,8 @@ Usage:
         tools/submit_extract.py --input <docs.parquet> --output <dir> \
         [--buckets 64] [--salt-partitions 256] [--no-resume]
 
-    # raw-bytes ingestion instead of span-model input
+    # raw files instead of a span table: nothing is persisted, each pending
+    # file is parsed once, and an all-done resubmit reads no file contents
     ... --input-format binary --input <dir-of-files> --output <dir>
 """
 
@@ -77,16 +78,8 @@ def main(argv: list[str]) -> int:
     spark = get_spark(app_name="extract-text-submit")
     t0 = time.monotonic()
     if args.input_format == "binary":
-        from pyspark import StorageLevel
-        from extract_text_spark.ingest import ingest_bytes_df, named_binary_df
-        # materialization barrier: the checkpointed pipeline consumes docs
-        # several times (bucket derivation, emptiness probe, extraction) —
-        # without the persist each pass re-runs the container-parsing
-        # kernel over every file
-        docs = ingest_bytes_df(
-            named_binary_df(spark.read.format("binaryFile")
-                            .load(args.input))).persist(
-            StorageLevel.MEMORY_AND_DISK)
+        from extract_text_spark.ingest import named_binary_df
+        docs = named_binary_df(spark.read.format("binaryFile").load(args.input))
     else:
         docs = spark.read.parquet(args.input)
     metrics = run_extraction(
