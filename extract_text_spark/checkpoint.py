@@ -5,8 +5,9 @@ resume after failure without reprocessing or duplicating work.
 
 Mechanism (SURVEY.md §4.3):
 
-* every document is assigned a deterministic ``bucket = pmod(xxhash64(
-  doc_id), num_buckets)``;
+* every input document is assigned a deterministic ``bucket =
+  pmod(xxhash64(doc_id), num_buckets)``, which extraction carries onto
+  every row the document fans out to (archive members included);
 * extraction output is written as parquet **partitioned by bucket** with
   ``partitionOverwriteMode=dynamic`` — re-running a bucket *overwrites* its
   partition instead of duplicating it (the parquet stand-in for an Iceberg
@@ -53,6 +54,24 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
     )
+
+
+def bucketed_extraction(docs: DataFrame, num_buckets: int,
+                        salt_partitions: int | None = None) -> DataFrame:
+    """Bucketed input (``with_bucket``) -> the rows ``run_extraction``
+    writes: OUT_SCHEMA followed by ``bucket``.
+
+    Fan-out children land in their root document's bucket: extraction
+    carries ``bucket`` onto every row a document fans out to, so
+    bucket-level resume stays exact (children re-derive deterministically
+    from their root) even for input doc_ids that contain '/'. Byte
+    ingestion keeps each file's doc_id, so a raw-file table's ingest output
+    is bucketed again by the same rule.
+    """
+    docs = (with_bucket(ingest_bytes_df(docs), num_buckets)
+            if "content" in docs.columns
+            else docs.select("doc_id", "spans", "bucket"))
+    return extract_spans_df(docs, salt_partitions=salt_partitions)
 
 
 def completed_buckets(spark: SparkSession, output_dir: str) -> DataFrame | None:
@@ -102,19 +121,7 @@ def run_extraction(
     if docs.select("bucket").isEmpty():
         return {"buckets": 0, "docs": 0, "spans": 0, "bytes_in": 0,
                 "wall_ms": int((time.monotonic() - t0) * 1000)}
-    docs = (ingest_bytes_df(docs) if "content" in docs.columns
-            else docs.select("doc_id", "spans"))
-
-    # NB: fan-out children land in the *parent's* bucket so bucket-level
-    # resume stays exact (children re-derive deterministically from parents).
-    # The pipeline carries the pre-fan-out root_id through the kernel —
-    # string-splitting the child doc_id would mis-bucket inputs whose own
-    # doc_id contains '/'.
-    result = extract_spans_df(docs, salt_partitions=salt_partitions,
-                              keep_root=True)
-    result = result.withColumn(
-        "bucket", F.pmod(F.xxhash64("root_id"), F.lit(num_buckets)).cast("int")
-    ).drop("root_id")
+    result = bucketed_extraction(docs, num_buckets, salt_partitions)
     # The overwrite mode is pinned on THIS write, not the shared session:
     # under Spark's default *static* mode, mode('overwrite').partitionBy
     # would truncate the whole {output}/data directory while the manifest

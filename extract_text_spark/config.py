@@ -19,6 +19,3 @@ SKEW_SPLIT_BYTES = 256 * 1024              # whale threshold: page-only docs
                                            # above this (~50-100x the median
                                            # doc) count as oversized
 DEFAULT_NUM_BUCKETS = 64                   # checkpoint manifest granularity
-
-# Output span kinds (the explicit form of the reference's inline markers).
-OUT_KINDS = ("text", "heading", "table", "code", "media")

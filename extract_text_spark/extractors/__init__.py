@@ -47,9 +47,6 @@ _OUT_KIND = {
     "sheet_part": "table",
 }
 
-BYTE_KINDS = {"plain", "eml", "msg"}  # + source:* prefix
-
-
 def _filename_for(doc_id: str, ext: str) -> str:
     """Source-code header filename convention: last doc_id path segment."""
     return f"{doc_id.rsplit('/', 1)[-1]}.{ext}"

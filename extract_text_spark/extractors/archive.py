@@ -12,8 +12,6 @@ Archive member payload convention (one ``archive_member`` span per member):
 
 from __future__ import annotations
 
-from ..config import MAX_ARCHIVE_NESTING
-
 # app/extractors.py:2016-2035 — substring blacklist, case-insensitive.
 SYSTEM_FILE_MARKERS = [
     ".ds_store", "thumbs.db", ".git/", ".svn/", ".hg/", "__macosx/",
@@ -45,6 +43,3 @@ def child_doc_id(parent_doc_id: str, member_path: str) -> str:
     """``{archive}/{member}`` output path convention
     (app/extractors.py:1980-1988)."""
     return f"{parent_doc_id}/{member_path}"
-
-
-MAX_NESTING = MAX_ARCHIVE_NESTING

@@ -3,7 +3,7 @@
 The reference OCRs images via a Tesseract subprocess (app/extractors.py:
 1386-1519) and fences it with size/mode validation (app/utils.py:639-682).
 In the Spark engine, media are ``binary`` columns with typed metadata; the
-*plumbing* — schema, Arrow batch shape, partitioning, validation gates —
+*plumbing* — schema, Arrow batch shape, validation gates —
 is real and tested. PNG, GIF, TIFF and BMP rasters decode and resize
 through the numpy/stdlib decoders below, and the feature kernel parses
 BMP, PNG, GIF, WAV, FLAC, MP3, MP4 and WebM headers for dimensions,
@@ -637,17 +637,13 @@ def _feature_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
         yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
 
 
-def extract_media_features(df: DataFrame,
-                           partitions: int | None = None) -> DataFrame:
+def extract_media_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary media rows.
 
-    Real pipeline shape: validate -> salt-repartition (media payloads are
-    the skew magnets) -> mapInPandas decode/feature kernel.
+    Pipeline shape: validate -> mapInPandas decode/feature kernel over the
+    input partitions.
     """
     valid = validate_media_df(df).filter("valid")
-    if partitions:
-        valid = valid.repartition(partitions, F.pmod(F.xxhash64("media_ref"),
-                                                     F.lit(partitions)))
     return valid.select("media_ref", "payload").mapInPandas(
         _feature_batches, schema=FEATURE_SCHEMA
     )
@@ -1288,21 +1284,17 @@ def _resize_batches(max_dim: int):
     return kernel
 
 
-def resize_media(df: DataFrame, max_dim: int,
-                 partitions: int | None = None) -> DataFrame:
+def resize_media(df: DataFrame, max_dim: int) -> DataFrame:
     """Aspect-preserving image resize over binary media rows — the
     training-pipeline normalization pass. Same shape as
-    ``extract_media_features``: validate -> salt-repartition -> Arrow
-    kernel. Uncompressed BMPs AND deflate-compressed PNGs (8-bit
-    gray/RGB/LA/RGBA, non-interlaced) are resized for REAL
+    ``extract_media_features``: validate -> Arrow kernel. Uncompressed
+    BMPs AND deflate-compressed PNGs (8-bit gray/RGB/LA/RGBA,
+    non-interlaced) are resized for REAL
     (``resize_bmp`` / ``resize_png``, pure-stdlib nearest-neighbour);
     other compressed rasters with decodable headers emit the exact
     integer resize plan with pixels behind the documented stub; unknown
     payloads are 'unsupported'."""
     valid = validate_media_df(df).filter("valid")
-    if partitions:
-        valid = valid.repartition(partitions, F.pmod(F.xxhash64("media_ref"),
-                                                     F.lit(partitions)))
     return valid.select("media_ref", "payload").mapInPandas(
         _resize_batches(max_dim), schema=RESIZE_SCHEMA)
 
@@ -1353,8 +1345,7 @@ def _frame_batches(interval_ms: int):
     return kernel
 
 
-def sample_frames(df: DataFrame, interval_ms: int = 1000,
-                  partitions: int | None = None) -> DataFrame:
+def sample_frames(df: DataFrame, interval_ms: int = 1000) -> DataFrame:
     """Fixed-interval frame/segment sampling over time-based media — the
     plan every audio/video featurization pass starts from. Timestamps are
     integer arithmetic over REAL header durations (WAV's is exact:
@@ -1366,8 +1357,5 @@ def sample_frames(df: DataFrame, interval_ms: int = 1000,
     timestamp walk belongs to the codec layer); other payloads are
     'unsupported'."""
     valid = validate_media_df(df).filter("valid")
-    if partitions:
-        valid = valid.repartition(partitions, F.pmod(F.xxhash64("media_ref"),
-                                                     F.lit(partitions)))
     return valid.select("media_ref", "payload").mapInPandas(
         _frame_batches(interval_ms), schema=FRAME_SCHEMA)

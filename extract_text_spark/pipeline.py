@@ -26,7 +26,10 @@ it removed.
 
 The output schema is
 ``(doc_id, status, spans array<struct<kind,text,media_ref,offset>>,
-n_spans, n_chars, bytes_in)``.
+n_spans, n_chars, bytes_in)``, followed by the input's other columns.
+Those ride through unchanged: every document a row fans out to, and every
+output row the kernel makes of it, carries the row's values. That is how
+checkpointing keeps each archive member in its root document's bucket.
 """
 
 from __future__ import annotations
@@ -233,7 +236,7 @@ def _fanout_docs(gateway: object) -> Column:
     ).otherwise(fanned)
 
 
-def explode_archives_df(df: DataFrame, with_root: bool = False) -> DataFrame:
+def explode_archives_df(df: DataFrame) -> DataFrame:
     """A1-A6 archive fan-out in ONE scan: a single nested-transform
     expression computes every fan-out level (bounded depth 3) per row, then
     one ``explode`` emits the documents — no unions, no repeated scans.
@@ -241,11 +244,8 @@ def explode_archives_df(df: DataFrame, with_root: bool = False) -> DataFrame:
     (A2) are inlined as column predicates; guard-rejected rows surface with
     a non-null ``status``.
 
-    ``with_root=True`` adds a ``root_id`` column carrying the pre-fan-out
-    input doc_id (null when unchanged — i.e. for non-archive rows — so the
-    mostly-null column shuffles for free). Checkpointing buckets by root so
-    fan-out children land in their parent's bucket even when input doc_ids
-    themselves contain ``/``.
+    The output is ``(doc_id, spans, status)`` followed by the input's other
+    columns, which are copied onto every document the row fans out to.
     """
     if "status" not in df.columns:
         df = df.withColumn("status", F.lit(None).cast(StringType()))
@@ -256,16 +256,12 @@ def explode_archives_df(df: DataFrame, with_root: bool = False) -> DataFrame:
         "spans", F.coalesce("spans", F.array().cast(SPANS_TYPE.simpleString()))
     )
 
-    out = (
-        df.select(F.col("doc_id").alias("_root"),
+    carried = [c for c in df.columns if c not in ("doc_id", "spans", "status")]
+    return (
+        df.select(*carried,
                   F.explode(_fanout_docs(SparkContext._gateway)).alias("d"))
-        .select(
-            "d.doc_id", "d.spans", "d.status",
-            F.when(F.col("d.doc_id") != F.col("_root"), F.col("_root"))
-            .alias("root_id"),
-        )
+        .select("d.doc_id", "d.spans", "d.status", *carried)
     )
-    return out if with_root else out.drop("root_id")
 
 
 # ---------------------------------------------------------------------------
@@ -273,6 +269,8 @@ def explode_archives_df(df: DataFrame, with_root: bool = False) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    """``(doc_id, spans, status, *carried)`` batches -> OUT_SCHEMA rows,
+    each followed by its input row's carried values."""
     import pandas as pd
 
     from .extractors import extract_document
@@ -290,10 +288,13 @@ def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
             st, out = extract_document(doc_id, span_dicts)
             n_chars = sum(len(s["text"] or "") for s in out if s["text"])
             rows.append((doc_id, st, out, len(out), n_chars, bytes_in))
-        yield pd.DataFrame(
+        frame = pd.DataFrame(
             rows,
             columns=["doc_id", "status", "spans", "n_spans", "n_chars", "bytes_in"],
         )
+        for name in batch.columns[3:]:
+            frame[name] = batch[name].to_numpy()
+        yield frame
 
 
 def _splittable_col(threshold: int):
@@ -313,26 +314,10 @@ def _splittable_col(threshold: int):
     )
 
 
-_ROOT_FIELD = StructField("root_id", StringType())
-
-
-def _extract_batches_with_root(
-    batches: Iterator["pd.DataFrame"],
-) -> Iterator["pd.DataFrame"]:
-    """``_extract_batches`` that carries each row's ``root_id`` through."""
-    import pandas as pd
-
-    for batch in batches:
-        root = batch[["root_id"]].reset_index(drop=True)
-        res = next(_extract_batches(iter([batch]))).reset_index(drop=True)
-        yield pd.concat([res, root], axis=1)
-
-
 def extract_spans_df(
     df: DataFrame,
     salt_partitions: int | None = None,
     skew_split: bool = False,
-    keep_root: bool = False,
 ) -> DataFrame:
     """documents(doc_id, spans) -> extracted spans DataFrame (OUT_SCHEMA).
 
@@ -344,26 +329,26 @@ def extract_spans_df(
     working; whales are not span-chunked, and ``True`` raises
     ``ValueError``.
 
-    ``keep_root=True`` appends a ``root_id`` column: the pre-fan-out input
-    doc_id (== doc_id for non-archive rows). Only keep_root callers
-    (checkpointing) pay the carry cost — the default path is byte-identical
-    to the plain 3-column kernel plan.
+    Input columns other than ``doc_id``/``spans``/``status`` follow the
+    OUT_SCHEMA columns: each output row, fan-out children and error rows
+    included, carries the values of the input row it came from, nulls
+    included. A ``(doc_id, spans)`` input gets exactly OUT_SCHEMA. The
+    values cross the pandas hand-off: in an Arrow batch where an integer
+    column holds a null, pandas holds it as float64, so its values beyond
+    2**53 come back rounded.
     """
     if skew_split:
         raise ValueError("skew_split=True is no longer supported: every "
                          "document takes the one-pass plan")
-    fanned = explode_archives_df(df, with_root=keep_root)
+    fanned = explode_archives_df(df)
     if salt_partitions:
         fanned = fanned.repartition(
             salt_partitions, F.pmod(F.xxhash64("doc_id"), F.lit(salt_partitions))
         )
-    if keep_root:
-        return fanned.select(
-            "doc_id", "spans", "status", "root_id"
-        ).mapInPandas(
-            _extract_batches_with_root,
-            schema=StructType(OUT_SCHEMA.fields + [_ROOT_FIELD]),
-        ).withColumn("root_id", F.coalesce("root_id", "doc_id"))
-    return fanned.select("doc_id", "spans", "status").mapInPandas(
-        _extract_batches, schema=OUT_SCHEMA
+    carried = fanned.schema.fields[3:]
+    if {f.name for f in carried} & set(OUT_SCHEMA.fieldNames()):
+        raise ValueError("a carried input column has the name of an "
+                         "extraction output column")
+    return fanned.mapInPandas(
+        _extract_batches, schema=StructType(OUT_SCHEMA.fields + carried)
     )

@@ -387,6 +387,8 @@ def spans_from_url(url: str, fetch, user_agent: str | None = None,
     return spans_from_bytes(content, filename)
 
 
+FETCH_PARTITIONS_PER_CORE = 2  # url partitions per defaultParallelism slot
+
 _URL_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
     StructField("status", StringType()),
@@ -402,20 +404,19 @@ _URL_SCHEMA = StructType([
 def ingest_urls_df(df: DataFrame, fetch, url_col: str = "url",
                    user_agent: str | None = None,
                    resolver=default_resolver,
-                   process_images: bool = True,
-                   partitions: int | None = None) -> DataFrame:
+                   process_images: bool = True) -> DataFrame:
     """URL table -> span-model documents (doc_id = url). One Arrow kernel
     per row does validation + injected fetch + routing; extraction runs
     in the SAME downstream kernel as every other source, exactly once.
     Quarantine rows carry the endpoint's error strings in ``status``.
 
-    The url list is hash-repartitioned BEFORE the kernel (default
-    2x defaultParallelism): a URL table is tiny on disk but each row is
-    real fetch+parse work, so inheriting the file's input splits would
-    serialize the whole fetch tier onto a handful of tasks."""
-    spark = df.sparkSession
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism * 2
+    The url list is hash-repartitioned BEFORE the kernel (to
+    ``FETCH_PARTITIONS_PER_CORE`` x defaultParallelism): a URL table is
+    tiny on disk but each row is real fetch+parse work, so inheriting the
+    file's input splits would serialize the whole fetch tier onto a
+    handful of tasks."""
+    partitions = (df.sparkSession.sparkContext.defaultParallelism
+                  * FETCH_PARTITIONS_PER_CORE)
     src = df.select(url_col).repartition(partitions, F.col(url_col))
     def kernel(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -445,8 +446,8 @@ def extract_from_urls(df: DataFrame, fetch,
     from pyspark import StorageLevel
     from .pipeline import extract_spans_df
     ingest_kwargs = {k: kwargs.pop(k) for k in
-                     ("url_col", "user_agent", "resolver", "process_images",
-                      "partitions") if k in kwargs}
+                     ("url_col", "user_agent", "resolver", "process_images")
+                     if k in kwargs}
     ing = ingest_urls_df(df, fetch, **ingest_kwargs).persist(
         StorageLevel.MEMORY_AND_DISK)
     if cache_registry is not None:

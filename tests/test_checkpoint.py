@@ -99,10 +99,19 @@ def test_slash_in_input_doc_id_buckets_consistently(spark, tmp_path):
     assert m1["buckets"] + m2["buckets"] == 8
     assert _result_map(spark, two) == _result_map(spark, one)
     # fan-out children (doc_id extended with member path) stay in their
-    # parent's bucket: every child row shares the parent's partition value
+    # root's bucket: every written row's partition value is the root's hash
     data = spark.read.parquet(f"{two}/data")
     n_children = data.filter(~F.col("doc_id").startswith("s3://")).count()
     assert n_children == 0  # all ids keep the root prefix
+    root_bucket = {r["doc_id"]: r["b"] for r in df.select(
+        "doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(8)).alias("b")).collect()}
+    n_fanned = 0
+    for r in data.select("doc_id", "bucket").collect():
+        (root,) = [k for k in root_bucket
+                   if r["doc_id"] == k or r["doc_id"].startswith(k + "/")]
+        assert r["bucket"] == root_bucket[root], r["doc_id"]
+        n_fanned += r["doc_id"] != root
+    assert n_fanned > 0
     # a third run is a no-op
     m3 = run_extraction(spark, df, two, num_buckets=8)
     assert m3["buckets"] == 0

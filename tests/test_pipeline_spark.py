@@ -93,8 +93,6 @@ def test_skew_split_true_is_rejected(spark):
     with pytest.raises(ValueError, match="skew_split"):
         extract_spans_df(df, skew_split=True)
     with pytest.raises(ValueError, match="skew_split"):
-        extract_spans_df(df, keep_root=True, skew_split=True)
-    with pytest.raises(ValueError, match="skew_split"):
         extract_spans_df(None, skew_split=True)
 
 
@@ -129,6 +127,79 @@ def test_archive_fanout_matches_oracle(spark):
     assert got == exp
     # fan-out actually produced children with path-suffixed doc_ids
     assert any("/" in k for k in got)
+
+
+def _member(path, kind, text, members=None):
+    return {"path": path, "kind": kind, "text": text, "media_ref": None,
+            "is_archive": members is not None,
+            "members": None if members is None else json.dumps(members)}
+
+
+def _archive(doc_id, members):
+    return {"doc_id": doc_id, "spans": [
+        {"kind": "archive_member", "text": json.dumps(m), "media_ref": None,
+         "offset": i} for i, m in enumerate(members)]}
+
+
+def test_extra_columns_ride_to_every_fanned_row(spark, monkeypatch):
+    """Input columns besides doc_id/spans/status reach every output row a
+    document fans out to: nested-archive children (three levels), a
+    guard-rejected archive's error row and a passed-through error row all
+    carry their root's value, nulls included. The extracted rows are those
+    of the same input without the extra column."""
+    from pyspark.sql.types import (
+        IntegerType, StringType, StructField, StructType,
+    )
+
+    from extract_text_spark import pipeline
+    from extract_text_spark.pipeline import ARCHIVE_TOO_LARGE, DOC_SCHEMA
+    lvl3 = [_member("deep.txt", "plain", "bottom text")]
+    lvl2 = [_member("mid.zip", "archive", None, lvl3),
+            _member("mid.md", "markdown", "# Mid\n\nmiddle body")]
+    lvl1 = [_member("top.zip", "archive", None, lvl2),
+            _member("top.txt", "plain", "top text")]
+    docs = [d for d in gen_corpus(200, seed=11) if "-archive" in d["doc_id"]]
+    docs += [_archive("nest.zip", lvl1), _archive("null.zip", lvl1),
+             _archive("bomb.zip", [_member("big.txt", "plain", "x" * 5000),
+                                   _member("ok.txt", "plain", "fine")])]
+    rows = [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"],
+                            s["offset"]) for s in d["spans"]], None)
+            for d in docs]
+    rows.append(("failed.bin", None, "error: ingest failed"))
+    roots = {r[0]: i for i, r in enumerate(rows)}
+    roots["null.zip"] = None
+    schema = StructType(DOC_SCHEMA.fields + [
+        StructField("status", StringType()),
+        StructField("root_no", IntegerType())])
+    df = spark.createDataFrame([(*r, roots[r[0]]) for r in rows],
+                               schema=schema)
+
+    # A 1,000-char bomb guard makes bomb.zip a guard-rejected archive
+    # without a 100 MB row; the memoized fan-out is rebuilt on both sides.
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "MAX_EXTRACTED_SIZE", 1000)
+        pipeline._fanout_docs.cache_clear()
+        try:
+            carried = extract_spans_df(df, salt_partitions=4).collect()
+            plain = extract_spans_df(df.drop("root_no")).collect()
+        finally:
+            pipeline._fanout_docs.cache_clear()
+
+    assert len(carried) == len(plain)
+    assert _spanify(carried) == _spanify(plain)
+    got = {r["doc_id"]: r for r in carried}
+    assert got["bomb.zip"]["status"] == ARCHIVE_TOO_LARGE
+    assert got["failed.bin"]["status"] == "error: ingest failed"
+    assert got["nest.zip/top.zip/mid.zip/deep.txt"]["status"] == "ok"
+    assert "null.zip/top.zip/mid.zip/deep.txt" in got
+    for r in carried:
+        (root,) = [k for k in roots
+                   if r["doc_id"] == k or r["doc_id"].startswith(k + "/")]
+        assert r["root_no"] == roots[root], r["doc_id"]
+    assert sum("/" in k for k in got) > 10
+
+    with pytest.raises(ValueError, match="output column"):
+        extract_spans_df(df.withColumnRenamed("root_no", "n_chars"))
 
 
 def test_no_python_in_fanout_plan(spark):

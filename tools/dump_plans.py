@@ -139,6 +139,32 @@ def main():
         ("exactly one parquet scan", one_scan),
     ])
 
+    from extract_text_spark.checkpoint import bucketed_extraction, with_bucket
+    ckpt = bucketed_extraction(
+        with_bucket(_docs_as_span_table(spark, SF), 8), 8, salt_partitions=8)
+
+    def kernel_and_above(ftext: str) -> tuple[str, str]:
+        """The kernel's detail section, and the detail sections of the
+        nodes above it (node ids count up from the scan)."""
+        tail = re.split(r"\n\(\d+\) MapInPandas\n", ftext, maxsplit=1)[-1]
+        own, _, above = tail.partition("\n\n(")
+        return own, above
+
+    add("checkpointed span table — the bucket rides through the one kernel "
+        "(checkpoint.run_extraction)", ckpt, [
+        ("exactly one Arrow-batched kernel (one MapInPandas node)",
+         lambda t: n_nodes(t, "MapInPandas") == 1),
+        ("the kernel reads exactly (doc_id, spans, status, bucket) and "
+         "bucket is in its output",
+         lambda t: re.search(r"Input \[4\]: \[doc_id#\d+, spans#\d+, "
+                             r"status#\d+, bucket#\d+\]\n.*\)#\d+, "
+                             r"\[[^\]]*\bbucket#",
+                             kernel_and_above(t)[0]) is not None),
+        ("no xxhash64 above the kernel (the bucket is hashed once, on the "
+         "input doc_id)",
+         lambda t: "xxhash64" not in kernel_and_above(t)[1]),
+    ])
+
     topk = QUERIES["sim_cosine_topk"](spark, SF)
     add("sim_cosine_topk — broadcast query side", topk, [
         ("queries broadcast (vectors never shuffle for the join)",

@@ -16,6 +16,8 @@ Usage:
     spark-submit --py-files /tmp/engine.zip \
         tools/submit_extract.py --input <docs.parquet> --output <dir> \
         [--buckets 64] [--salt-partitions 256] [--no-resume]
+    # without --salt-partitions there is no salt shuffle: the extraction
+    # kernel runs on the scan partitions
 
     # raw files instead of a span table: nothing is persisted, each pending
     # file is parsed once, and an all-done resubmit reads no file contents
@@ -59,7 +61,8 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--buckets", type=int, default=64,
                     help="checkpoint buckets (resume granularity)")
     ap.add_argument("--salt-partitions", type=int, default=None,
-                    help="salt shuffle width (default: shuffle.partitions)")
+                    help="salt shuffle width (default: no salt shuffle; "
+                    "the kernel runs on the scan partitions)")
     ap.add_argument("--no-resume", action="store_true",
                     help="reprocess every bucket even if manifested")
     args = ap.parse_args(argv)
